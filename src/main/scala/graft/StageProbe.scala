@@ -23,9 +23,10 @@ object StageProbe {
     val names = args.drop(1).toSeq
     val spark = GraftSession.create("graft-stageprobe")
     // `collecting` is written on the main thread and read on the
-    // listener-bus thread; `rows` is appended on the bus thread and read
-    // on main (after the drain sleep) — @volatile + a lock keep warmup
-    // stages out of the measured set and appends visible (ADVICE r19).
+    // listener-bus thread; `rows` is appended on the bus thread and
+    // cleared and read on main — @volatile keeps warmup stages out of the
+    // measured set, and every access to `rows` holds its lock (main reads
+    // a snapshot taken under it, after the drain sleep).
     val rows = mutable.ArrayBuffer.empty[StageRow]
     @volatile var collecting = false
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -44,40 +45,34 @@ object StageProbe {
           }
         }
     })
-    def purge(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      graft.ops.TextAnalysis.clearGramCache()
-    }
     def run(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
     names.foreach { name =>
-      purge(); run(name) // warmup
-      purge()
-      rows.clear()
+      Bench.purgeStorage(spark); run(name) // warmup
+      Bench.purgeStorage(spark)
+      rows.synchronized(rows.clear())
       collecting = true
       val cg = org.apache.spark.metrics.source.CodegenMetrics
       val gc0 = gcMs(); val cgt0 = cg.METRIC_COMPILATION_TIME.getCount
       val cgn0 = cg.METRIC_SOURCE_CODE_SIZE.getCount
       val jit0 = java.lang.management.ManagementFactory
         .getCompilationMXBean.getTotalCompilationTime
-      val c0 = cpu()
+      val c0 = Bench.cpuSeconds()
       val t0 = System.nanoTime()
       run(name)
       val wall = (System.nanoTime() - t0) / 1e9
-      val dcpu = cpu() - c0
+      val dcpu = Bench.cpuSeconds() - c0
       val dgc = (gcMs() - gc0) / 1e3
       val dcgt = cg.METRIC_COMPILATION_TIME.getCount - cgt0
       val dcgn = cg.METRIC_SOURCE_CODE_SIZE.getCount - cgn0
       collecting = false
       // give the listener bus a moment to drain
       Thread.sleep(500)
-      val sorted = rows.sortBy(-_.runMs)
+      val snap = rows.synchronized(rows.toIndexedSeq)
+      val sorted = snap.sortBy(-_.runMs)
       println(f"%nSTAGEPROBE $name  wall=$wall%.2f s  proc-cpu=$dcpu%.2f s  " +
-        f"stages=${rows.length}  sum-stage-run=${rows.map(_.runMs).sum / 1e3}%.2f s  " +
-        f"sum-stage-cpu=${rows.map(_.cpuNs).sum / 1e9}%.2f s  " +
+        f"stages=${snap.length}  sum-stage-run=${snap.map(_.runMs).sum / 1e3}%.2f s  " +
+        f"sum-stage-cpu=${snap.map(_.cpuNs).sum / 1e9}%.2f s  " +
         f"gc=$dgc%.2f s  janino-compiles=$dcgn (histo-count=$dcgt)  " +
         f"jit=${(java.lang.management.ManagementFactory.getCompilationMXBean
           .getTotalCompilationTime - jit0) / 1e3}%.2f s")
@@ -96,11 +91,4 @@ object StageProbe {
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).sum
   }
-
-  private def cpu(): Double =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean =>
-        b.getProcessCpuTime / 1e9
-      case _ => 0.0
-    }
 }

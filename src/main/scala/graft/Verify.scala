@@ -6,8 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = GraftSession.create("graft-verify",
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
+    val spark = GraftSession.create("graft-verify")
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: comma-separated query names; unset (the driver's
     // mode) dumps everything
@@ -22,10 +21,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // ops like jaccardPairs cache intermediates and dupClusters leaves its
-      // result checkpoint; release both between queries (clearCache alone
-      // does not touch localCheckpoint blocks)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      // result checkpoint; release both between queries
+      Bench.purgeStorage(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

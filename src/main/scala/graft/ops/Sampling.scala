@@ -86,7 +86,7 @@ object Sampling {
     * output shape (min-id representative); docs absent from it are
     * singletons and split on their own id. Scale shape: one hash join
     * corpus × cluster table (plain shuffle join — the cluster table is
-    * pair-derived and can be corpus-sized, the WalkProbe discipline; a
+    * pair-derived and can be corpus-sized, so no broadcast is forced; a
     * dedup run that found few dups broadcasts under AQE automatically),
     * then the stateless [[splitColumn]] hash — no window, no extra
     * shuffle. */

@@ -1953,8 +1953,7 @@ object TextAnalysis {
     * carry an order-n slot scores NULL in BOTH LMs (identical slot
     * grids) and NULL ml. Scale shape: two ladder passes over the same
     * document slots (2·(2·order−1) hash joins against two count-table
-    * sets — the general-LM tables are typically the corpus-wide tables
-    * q169 already built, shared via the session memo) + one id join. */
+    * sets, each built by [[ngramCountTables]]) + one id join. */
   def mooreLewis(docs: DataFrame, id: Column, text: Column,
       inRef: DataFrame, inRefText: Column,
       genRef: DataFrame, genRefText: Column,
@@ -1988,87 +1987,15 @@ object TextAnalysis {
       .select(keep ++ ws.map(w => col(s"__g.$w").as(w)): _*)
   }
 
-  /** Session-scoped memo for [[ngramCountTables]] — q169 (unpruned ladder)
-    * and q175 (KenLM-style prune, which is a FILTER over the aggregated
-    * tables) consume the IDENTICAL unpruned count tables, the top
-    * shareable cost in the suite profile (~35 combined cpu-s at sf0.1).
-    * The [[graft.queries.VectorQueries]] walk-memo discipline verbatim:
-    * persist at CREATION only (an external purge — Bench/ScaleCpu/Verify
-    * all drop storage between queries by design, their per-query
-    * isolation contract — is respected; the memo wins land in no-purge
-    * production multi-query sessions: GramProbe measures the q169+q175
-    * pair at sf0.1 at 14.3→10.2 s wall / −13 % cpu when q175 reuses
-    * q169's tables instead of rebuilding), the value stays
-    * DISTRIBUTED (count tables are Zipf-small but corpus-derived —
-    * MEMORY_AND_DISK, never a driver collect), the session participates
-    * in the key, and the key folds in [[SessionMemo.fileFingerprint]] so
-    * a rewritten-in-place corpus is rescanned, not served stale. Bounded
-    * at 16 entries with remove-then-unpersist eviction (each removal is
-    * atomic, so a concurrently inserted entry is never left persisted but
-    * unreachable).
-    *
-    * Persistence POLICY (r16→r17, the `spark.graft.gramMemo` conf):
-    * persisting at creation made the FIRST consumer pay the columnar
-    * cache-build (q169 +35 % cpu in purge-between-queries harnesses —
-    * reuse that can never arrive, the two-harness discrepancy the r16
-    * verdict flagged), so the DEFAULT `deferred` mode returns raw lazy
-    * plans on first access (exactly the pre-memo r15 shape — isolation
-    * sessions pay nothing) and persists on the first memo HIT, making
-    * the third consumer onward ~free. A session that KNOWS it will
-    * reuse (the production multi-scorer shape GramProbe's shared pair
-    * measures) sets `spark.graft.gramMemo=eager` to persist at creation
-    * and make already the SECOND consumer ~free — the r16 behavior,
-    * opt-in instead of taxing every isolation harness. 100 TB analogue:
-    * checkpoint the count tables once and share them across every
-    * downstream scorer. */
-  private val gramCache =
-    new java.util.concurrent.ConcurrentHashMap[Any, Map[Int, DataFrame]]()
-
-  private[graft] def gramCacheSize: Int = gramCache.size
-
-  private[graft] def clearGramCache(): Unit = {
-    val it = gramCache.keySet.iterator()
-    while (it.hasNext) {
-      val v = gramCache.remove(it.next())
-      if (v != null) v.values.foreach(df => { df.unpersist(false); () })
-    }
-  }
-
+  /** The `order` corpus n-gram count tables (columns `w1..wm`, `__c`),
+    * built as lazy plans: nothing is persisted, so the calling query owns
+    * whatever it materializes. Direct mode: one gramSlots explode +
+    * groupBy per order (m corpus scans). Derived mode: ONE explode at the
+    * top order, then each lower table = prefix-aggregate of the one above
+    * + per-doc tail grams — identical counts (for a doc of L ≥ m+1 tokens
+    * the m-gram slots are the L−m prefixes of its (m+1)-grams plus the
+    * single tail at position L−m+1; for L = m the tail is the only slot). */
   private[graft] def ngramCountTables(ref: DataFrame, refText: Column,
-      order: Int, derive: Boolean): Map[Int, DataFrame] = {
-    val key = (ref.sparkSession,
-      ref.select(refText).queryExecution.analyzed.canonicalized,
-      SessionMemo.fileFingerprint(ref), order, derive)
-    if (gramCache.size > 16) clearGramCache()
-    val eager = ref.sparkSession.conf
-      .getOption("spark.graft.gramMemo").contains("eager")
-    var created = false
-    val tables = gramCache.computeIfAbsent(key, _ => {
-      created = true
-      val built = buildNgramCountTables(ref, refText, order, derive)
-      if (eager) built.values.foreach { t =>
-        t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); ()
-      }
-      built
-    })
-    // memo HIT = a second consumer exists: persist now (idempotent on
-    // later hits — same storage level re-persists as a no-op), so only
-    // sessions that actually reuse pay the cache build
-    if (!created) tables.values.foreach { t =>
-      t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); ()
-    }
-    tables
-  }
-
-  /** The `order` corpus n-gram count tables (columns `w1..wm`, `__c`) —
-    * the uncached builder behind [[ngramCountTables]]. Direct mode: one
-    * gramSlots explode + groupBy per order (m corpus scans). Derived mode:
-    * ONE explode at the top order, then each lower table = prefix-
-    * aggregate of the one above + per-doc tail grams — identical counts
-    * (for a doc of L ≥ m+1 tokens the m-gram slots are the L−m prefixes
-    * of its (m+1)-grams plus the single tail at position L−m+1; for L = m
-    * the tail is the only slot). */
-  private def buildNgramCountTables(ref: DataFrame, refText: Column,
       order: Int, derive: Boolean): Map[Int, DataFrame] = {
     def direct(m: Int) = gramSlots(ref, Seq.empty, refText, m)
       .groupBy((1 to m).map(j => col(s"w$j")): _*)

@@ -14,69 +14,29 @@ object VectorQueries {
   private def queryVec(s: SparkSession, d: String) =
     emb(s, d).filter(col("vec_id") === 0)
 
-  /** Session-scoped semantic-walk memo (the `Similarity.centroidsFor`
-    * precedent): q268/q274/q275 all consume the IDENTICAL knnGraph(bits=8,
-    * k=3) → same-source edge restriction → greedy walk over (documents,
-    * embeddings), so the walk ORDER is memoized as a persisted DataFrame
-    * keyed by (session, canonicalized input plans) and the suite builds
-    * the graph once. Unlike the centroid memo the cached value is
-    * corpus-sized (one `(g, pos, doc)` row per document), so it stays
-    * DISTRIBUTED — `persist(MEMORY_AND_DISK)`, never a driver collect.
-    * The session participates in the key because a persisted frame from a
-    * stopped session must never be reused; same stale-on-rewrite caveat
-    * as `Similarity.clearCentroidCache` — CLOSED here by folding
-    * [[graft.ops.SessionMemo.fileFingerprint]] into the key (a rewritten
-    * parquet dir changes file lengths/mtimes, so the stale entry simply
-    * never matches again and ages out). Bounded (reset beyond 16 entries
-    * via remove-then-unpersist: each removal is atomic, so an entry
-    * inserted concurrently is either untouched or removed WITH its
-    * unpersist — never cleared from the map while left persisted). */
-  private val walkCache =
-    new java.util.concurrent.ConcurrentHashMap[Any, DataFrame]()
-
-  private[graft] def clearWalkCache(): Unit = {
-    val it = walkCache.keySet.iterator()
-    while (it.hasNext) {
-      val v = walkCache.remove(it.next())
-      if (v != null) { v.unpersist(false); () }
-    }
-  }
-
-  /** The q268/q274/q275 shared prefix: knnGraph edges restricted to
-    * same-source pairs, walked by [[graft.ops.Assembly.semanticWalk]].
-    * The same-source restriction joins the group key onto BOTH endpoints
-    * as plain HASH joins — the documents projection is corpus-sized (one
-    * row per document), so broadcasting it would break at 100 TB; the
-    * edge side is already bounded at k·|V| by knnGraph's construction,
-    * and a shuffle join on the endpoint id is the scale shape. */
+  /** The q268/q274/q275 shared prefix: knnGraph(bits=8, k=3) edges
+    * restricted to same-source pairs, walked by
+    * [[graft.ops.Assembly.semanticWalk]]. Returned as a plan with nothing
+    * persisted: each query owns what it materializes. The same-source
+    * restriction joins the group key onto BOTH endpoints as plain HASH
+    * joins — the documents projection is corpus-sized (one row per
+    * document), so broadcasting it would break at 100 TB; the edge side
+    * is already bounded at k·|V| by knnGraph's construction, and a
+    * shuffle join on the endpoint id is the scale shape. */
   private def semWalkOrder(s: SparkSession, d: String): DataFrame = {
     import graft.ops.Assembly
     val docs = t(s, d, "documents")
     val src = docs.select(col("doc_id"), col("source"))
     val ev = emb(s, d).select(col("vec_id"), col("embedding"))
-    val key = (s, src.queryExecution.analyzed.canonicalized,
-      ev.queryExecution.analyzed.canonicalized,
-      graft.ops.SessionMemo.fileFingerprint(src),
-      graft.ops.SessionMemo.fileFingerprint(ev))
-    if (walkCache.size > 16) clearWalkCache()
-    // persist ONCE at creation. If an external purge (Bench/ScaleCpu AND
-    // Verify drop all storage between queries — their per-query isolation
-    // contract) unpersists it, respect that: the query then recomputes
-    // storage-cold, exactly what those harnesses mean to measure.
-    // Sessions that do not purge (production multi-query sessions, the
-    // spec suite) build the graph+walk once and reuse it.
-    walkCache.computeIfAbsent(key, _ => {
-      val g = Sim.knnGraph(ev, col("vec_id"), col("embedding"),
-        bits = 8, k = 3)
-      val edges = g
-        .join(src.select(col("doc_id").as("i"), col("source").as("g")), "i")
-        .join(src.select(col("doc_id").as("j"), col("source").as("__gj")), "j")
-        .filter(col("g") === col("__gj"))
-        .select(col("g"), col("i"), col("j"), col("rk"))
-      Assembly.semanticWalk(docs.select(col("source"), col("doc_id")),
-          col("source"), col("doc_id"), edges)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+    val g = Sim.knnGraph(ev, col("vec_id"), col("embedding"),
+      bits = 8, k = 3)
+    val edges = g
+      .join(src.select(col("doc_id").as("i"), col("source").as("g")), "i")
+      .join(src.select(col("doc_id").as("j"), col("source").as("__gj")), "j")
+      .filter(col("g") === col("__gj"))
+      .select(col("g"), col("i"), col("j"), col("rk"))
+    Assembly.semanticWalk(docs.select(col("source"), col("doc_id")),
+      col("source"), col("doc_id"), edges)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -808,8 +768,7 @@ object VectorQueries {
     "q268_semantic_pack" -> ((s, d) => {
       import graft.ops.Chunking
       val docs = t(s, d, "documents")
-      // knn edges + greedy walk from the session memo (shared with
-      // q274/q275 — the graph is built once per session per input)
+      // knn edges + greedy walk (the prefix shared with q274/q275)
       val order = semWalkOrder(s, d)
       val chunks = Chunking.chunk(docs, col("doc_id"), col("text"),
         width = 32, stride = 32)
@@ -851,7 +810,7 @@ object VectorQueries {
 
     // q65's embedding near-dup removal at the PRODUCTION index width
     // (bits=12 — the config the 100 TB recipe runs, measured 1.2× at 10×
-    // data by EmbedScaleProbe; this is its missing correctness half).
+    // data in r13, README's scaling table; this is its correctness half).
     // Near-dup plants are positive scalings, so their sign pattern — and
     // hence their bucket at ANY width — is preserved exactly, while
     // organic pairs top out at cos ≈ 0.51 at both SFs. The oracle is

@@ -144,15 +144,16 @@ class OpsSpecR15 extends AnyFunSuite {
       (8, 1L, 3L, 8L, 1000L, 0L, 8L, 8L)))
   }
 
-  test("semantic-walk memo: warm (memoized) and cold (rebuilt) runs of " +
-    "q268 are bit-identical") {
+  test("semantic walk: repeat runs of q268 are bit-identical and leave " +
+    "nothing persisted") {
     val q = graft.queries.VectorQueries.queries("q268_semantic_pack")
-    graft.queries.VectorQueries.clearWalkCache()
-    val cold = q(spark, sf).collect().map(_.toSeq).toSeq
-    val warm = q(spark, sf).collect().map(_.toSeq).toSeq // memo hit
-    assert(warm === cold)
-    graft.queries.VectorQueries.clearWalkCache()
-    val recold = q(spark, sf).collect().map(_.toSeq).toSeq // rebuilt
-    assert(recold === cold)
+    spark.catalog.clearCache()
+    val first = q(spark, sf).collect().map(_.toSeq).toSeq
+    val second = q(spark, sf).collect().map(_.toSeq).toSeq
+    val third = q(spark, sf).collect().map(_.toSeq).toSeq
+    assert(second === first)
+    assert(third === first)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "q268 must not leave its walk order persisted after it returns")
   }
 }

@@ -144,11 +144,10 @@ class OpsSpecR17 extends AnyFunSuite {
       "a cluster's weights must sum to one document of mass (grid-close)")
   }
 
-  test("gram memo defers persistence to the SECOND consumer: an " +
-    "isolation session (one consumer, purge between queries) never pays " +
-    "the cache build; a reusing session persists on the first HIT") {
+  test("stupidBackoff persists nothing: after clearCache, two scorings " +
+    "of the same corpus leave the cache manager empty and agree") {
     import graft.ops.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("gramDefer").toString
+    val dir = java.nio.file.Files.createTempDirectory("gramNoPersist").toString
     val path = s"$dir/docs.parquet"
     import spark.implicits._
     Seq((1L, "a b c a b"), (2L, "b c a"), (3L, "c c a b a"))
@@ -158,18 +157,12 @@ class OpsSpecR17 extends AnyFunSuite {
         spark.read.parquet(path), col("doc_id"), col("text"),
         spark.read.parquet(path), col("text"), order = 2)
       .orderBy("id").collect().toSeq
-    TextAnalysis.clearGramCache()
     spark.catalog.clearCache()
-    val cold = score()
+    val first = score()
+    val second = score()
     assert(spark.sharedState.cacheManager.isEmpty,
-      "the FIRST consumer must not persist the count tables — " +
-        "purge-between-queries sessions would pay materialization for " +
-        "reuse that can never arrive (the r16 dual-harness discrepancy)")
-    val warm = score()
-    assert(!spark.sharedState.cacheManager.isEmpty,
-      "a memo HIT is a second consumer: the tables must persist now")
-    assert(cold === warm)
-    TextAnalysis.clearGramCache()
-    spark.catalog.clearCache()
+      "scoring must not leave the count tables persisted: the query that " +
+        "builds them owns them, and no later query may find them cached")
+    assert(first === second)
   }
 }
