@@ -57,7 +57,7 @@ object Bench {
     * iterative query accumulated for the session's lifetime — by q74 (which
     * sorts last) the block manager was the bottleneck, not the query. Each
     * timed query starts storage-cold and pays its own cache build. The
-    * one purge every harness (Bench, Verify, ScaleCpu, StageProbe) uses. */
+    * one purge every harness (Bench, Verify, Profile) uses. */
   private[graft] def purgeStorage(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

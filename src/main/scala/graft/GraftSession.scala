@@ -69,17 +69,17 @@ object GraftSession {
       // 8192 entries lets a long-lived multi-query session (the bench's
       // repeated passes, a production query service) reuse compiled
       // classes; memory cost is a few KB per entry. Static conf — must be
-      // set before the first session of the JVM; overridable via env for
-      // memory-constrained deployments.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE_ENTRIES", "8192"))
+      // set before the first session of the JVM; a memory-constrained
+      // deployment lowers it through GRAFT_SPARK_EXTRA_CONF below.
+      .config("spark.sql.codegen.cache.maxEntries", 8192L)
       // Generated class names embed the codegen stage id by default; AQE
       // materializes broadcast stages from racing futures, so the same
       // operator can get a different stage id (→ different class name →
       // different source → codegen-cache MISS) on every run. Dropping the
-      // id from the name makes re-runs byte-identical: StageProbe counts
-      // 10-12 Janino compiles per repeat run of q169 without this conf
-      // and 0 with it. Class names are a debugging aid only.
+      // id from the name makes re-runs byte-identical: a repeat run of
+      // q169 compiled 10-12 Janino classes without this conf and 0 with
+      // it (`codegen.compiles` in graft.Profile's record). Class names
+      // are a debugging aid only.
       .config("spark.sql.codegen.useIdInClassName", "false")
     extraConf.foreach { case (k, v) => b.config(k, v) }
     // r19 (optimization round): generic env passthrough so a deployment

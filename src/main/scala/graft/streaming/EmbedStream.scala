@@ -71,10 +71,11 @@ object EmbedStream {
       val adm = graft.ops.Dedup.admitStepEmbed(batch, col("vec_id"),
           col("embedding"), idx, bits, minCosine)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      adm.write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
-      graft.ops.Dedup.embedIndexOf(adm, col("vec_id"), col("embedding"), bits)
-        .write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
-      adm.unpersist(false)
+      try {
+        adm.write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
+        graft.ops.Dedup.embedIndexOf(adm, col("vec_id"), col("embedding"), bits)
+          .write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
+      } finally adm.unpersist(false)
       ()
     }
     arrivals.writeStream
@@ -111,22 +112,17 @@ object EmbedStream {
   def forgetDocs(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, upToBatchId: Long, ids: Seq[Long]): Int = {
     require(ids.nonEmpty, "forgetDocs: empty takedown list")
-    // recovery FIRST (r18 ADVICE): a seed published by a crashed
-    // compactor's roll-forward must be part of what the layout scan
-    // checks, not invisible until the compact() call recovers it
-    IncrementStore.recoverStore(spark, indexDir)
-    // pre-scan EVERY increment's own schema (a multi-dir parquet read
-    // samples ONE file's schema — a mixed old/new store could silently
-    // drop `doc` and filter nothing); sources stay intact on the raise
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val oldLayout =
-      if (!fs.exists(path)) Seq.empty[String]
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter(s => !spark.read.parquet(s.getPath.toString)
-          .columns.contains("doc"))
-        .map(_.getPath.getName)
+    // recovery FIRST (r18 ADVICE, inside the listing): a seed published
+    // by a crashed compactor's roll-forward must be part of what the
+    // layout scan checks, not invisible until the compact() call
+    // recovers it. Pre-scan EVERY increment's own schema (a multi-dir
+    // parquet read samples ONE file's schema — a mixed old/new store
+    // could silently drop `doc` and filter nothing); sources stay intact
+    // on the raise
+    val oldLayout = IncrementStore.incrementsBelow(spark, indexDir,
+        Long.MaxValue)
+      .filter(p => !spark.read.parquet(p).columns.contains("doc"))
+      .map(p => new org.apache.hadoop.fs.Path(p).getName)
     if (oldLayout.nonEmpty)
       throw new graft.core.BadCallException(
         s"EmbedStream.forgetDocs: increments ${oldLayout.mkString(", ")} " +
@@ -144,24 +140,12 @@ object EmbedStream {
   /** Committed increments visible to `batchId` (the
     * [[TextStream]] rule): seeds plus numeric increments strictly below
     * it; empty-schema frame on a cold start. Crash recovery runs first
-    * (r17 ADVICE — the [[TextStream.readIndexBelow]] rationale). A
-    * pre-r18 seed without the `doc` column is normalized with nulls so
-    * unions against new increments line up (admission never reads the
-    * id). */
+    * ([[IncrementStore.incrementsBelow]]). A pre-r18 seed without the
+    * `doc` column is normalized with nulls so unions against new
+    * increments line up (admission never reads the id). */
   private def readIndexBelow(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batchId: Long): DataFrame = {
-    IncrementStore.recoverStore(spark, indexDir)
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incs =
-      if (!fs.exists(path)) Seq.empty[String]
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter { s =>
-          val tag = s.getPath.getName.stripPrefix("inc=")
-          tag.toLongOption.forall(_ < batchId)
-        }
-        .map(_.getPath.toString).sorted
+    val incs = IncrementStore.incrementsBelow(spark, indexDir, batchId)
     if (incs.isEmpty)
       spark.range(0).select(col("id").as("bucket"),
         array().cast("array<float>").as("vec"),

@@ -167,14 +167,8 @@ object Governance {
     * against pointing this at a data-sized table by mistake. */
   def executeFromRequests(spark: SparkSession, requestStateDir: String,
       stores: Seq[Store], maxIds: Int = 1000000): DataFrame = {
-    IncrementStore.recoverStore(spark, requestStateDir)
-    val path = new org.apache.hadoop.fs.Path(requestStateDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incs =
-      if (!fs.exists(path)) Seq.empty[String]
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .map(_.getPath.toString).sorted
+    val incs = IncrementStore.incrementsBelow(spark, requestStateDir,
+      Long.MaxValue)
     require(incs.nonEmpty,
       s"Governance.executeFromRequests: no request increments under " +
         s"$requestStateDir — nothing to erase (takedown requests arrive " +

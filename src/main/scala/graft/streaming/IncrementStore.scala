@@ -26,11 +26,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  3. the sources are deleted, and the tmp RENAMES to its `inc=` tag.
   *
   * [[recover]] runs first on every call AND from every increment-READING
-  * path ([[recoverStore]] — the gates' `readIndexBelow` listings and the
-  * snapshot readers call it, closing the r17 ADVICE window where a
-  * compactor crash between source deletion and the rename left a
-  * RESTARTED gate admitting against a partial index until an operator
-  * happened to re-run compaction): a manifest-less tmp rolls BACK
+  * path ([[recoverStore]] and [[incrementsBelow]] — the gates'
+  * per-trigger listings and the snapshot readers call them, closing the
+  * r17 ADVICE window where a compactor crash between source deletion
+  * and the rename left a RESTARTED gate admitting against a partial
+  * index until an operator happened to re-run compaction): a
+  * manifest-less tmp rolls BACK
   * (delete — its sources never moved); a manifested tmp rolls FORWARD
   * (delete any listed source still present, publish the rename). So a
   * crash anywhere leaves either the old increments or the compacted seed
@@ -161,6 +162,29 @@ private[streaming] object IncrementStore {
         Erasure.dropIds(df, col("doc"), ids)
       },
       foldAll = true)
+  }
+
+  /** Every increment a reader bounded by `below` may see, as sorted
+    * paths: seeds (non-numeric tags) plus numeric batch increments
+    * strictly below `below`. A trigger that reads only earlier batches
+    * passes its own batch id, one that reads its own increment too
+    * passes `batchId + 1`, and a reader of the whole store passes
+    * `Long.MaxValue`. Recovery runs first (r17 ADVICE): a compactor that
+    * died between source deletion and the rename must not leave a
+    * restarted reader on a partial store. Empty when `dir` is absent.
+    * Hadoop FS, not java.io — the store lives on HDFS/object store at
+    * production. */
+  def incrementsBelow(spark: SparkSession, dir: String,
+      below: Long): Seq[String] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return Seq.empty
+    recover(fs, root)
+    fs.listStatus(root).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
+      .filter(_.getPath.getName.stripPrefix("inc=").toLongOption
+        .forall(_ < below))
+      .map(_.getPath.toString).sorted
   }
 
   /** Run crash recovery on a store from an increment-READING path — the

@@ -57,22 +57,24 @@ object MediaStream {
         .toDF()
         .select(col("media_id").as("doc"), col("kind"), col("phash"))
         .persist(lvl)
-      val admHash = Dedup.admitStepMedia(hashes, idx, maxHamming)
-        .persist(lvl)
-      // admitted = hash-admitted rows + rows that produced no hash
-      // (pass-through: the gate must not destroy what it cannot judge)
-      val admitted = batch
-        .join(hashes.select(col("doc").as("__h")),
-          col("media_id") === col("__h"), "left")
-        .join(admHash.select(col("doc").as("__a")),
-          col("media_id") === col("__a"), "left")
-        .filter(col("__h").isNull || col("__a").isNotNull)
-        .drop("__h", "__a")
-      admitted.write.mode("overwrite")
-        .parquet(s"$admittedDir/batch=$batchId")
-      admHash.write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
-      admHash.unpersist(false)
-      hashes.unpersist(false)
+      try {
+        val admHash = Dedup.admitStepMedia(hashes, idx, maxHamming)
+          .persist(lvl)
+        try {
+          // admitted = hash-admitted rows + rows that produced no hash
+          // (pass-through: the gate must not destroy what it cannot judge)
+          val admitted = batch
+            .join(hashes.select(col("doc").as("__h")),
+              col("media_id") === col("__h"), "left")
+            .join(admHash.select(col("doc").as("__a")),
+              col("media_id") === col("__a"), "left")
+            .filter(col("__h").isNull || col("__a").isNotNull)
+            .drop("__h", "__a")
+          admitted.write.mode("overwrite")
+            .parquet(s"$admittedDir/batch=$batchId")
+          admHash.write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
+        } finally admHash.unpersist(false)
+      } finally hashes.unpersist(false)
       ()
     }
     arrivals.writeStream
@@ -105,18 +107,7 @@ object MediaStream {
     * recovery first; empty (doc, kind, phash) frame on a cold start. */
   private def readIndexBelow(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, batchId: Long): DataFrame = {
-    IncrementStore.recoverStore(spark, indexDir)
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incs =
-      if (!fs.exists(path)) Seq.empty[String]
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter { s =>
-          val tag = s.getPath.getName.stripPrefix("inc=")
-          tag.toLongOption.forall(_ < batchId)
-        }
-        .map(_.getPath.toString).sorted
+    val incs = IncrementStore.incrementsBelow(spark, indexDir, batchId)
     if (incs.isEmpty)
       spark.range(0).select(col("id").as("doc"),
         lit("").as("kind"), col("id").as("phash"))

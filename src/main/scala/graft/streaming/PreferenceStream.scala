@@ -135,18 +135,11 @@ object PreferenceStream {
       graft.ops.Preference.pairCounts(batch, col("prompt"), col("a"),
           col("b"), col("winner"))
         .write.mode("overwrite").parquet(s"$stateDir/inc=$batchId")
-      // roll a crashed compaction forward BEFORE the listing (r17
+      // the listing rolls a crashed compaction forward first (r17
       // ADVICE): a snapshot summed over deleted-but-unrenamed sources
       // would silently UNDERCOUNT until an operator re-ran compaction
-      IncrementStore.recoverStore(spark, stateDir)
-      val path = new org.apache.hadoop.fs.Path(stateDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val incs = fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter(_.getPath.getName.stripPrefix("inc=").toLongOption
-          .forall(_ <= batchId))
-        .map(_.getPath.toString).sorted
-      val total = spark.read.parquet(incs: _*)
+      val total = spark.read.parquet(
+          IncrementStore.incrementsBelow(spark, stateDir, batchId + 1): _*)
         .groupBy("prompt", "lo", "hi")
         .agg(sum("wins_lo").as("wins_lo"), sum("wins_hi").as("wins_hi"))
       graft.ops.Preference.rankFromPairCounts(total)

@@ -51,18 +51,11 @@ object PrivacyStream {
       val spark = batch.sparkSession
       batch.distinct()
         .write.mode("overwrite").parquet(s"$stateDir/inc=$batchId")
-      // roll a crashed compaction forward BEFORE the listing (the r17
+      // the listing rolls a crashed compaction forward first (the r17
       // ADVICE rule): a snapshot over deleted-but-unrenamed sources
       // would silently undercount the release
-      IncrementStore.recoverStore(spark, stateDir)
-      val path = new org.apache.hadoop.fs.Path(stateDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val incs = fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter(_.getPath.getName.stripPrefix("inc=").toLongOption
-          .forall(_ <= batchId))
-        .map(_.getPath.toString).sorted
-      val union = spark.read.parquet(incs: _*)
+      val union = spark.read.parquet(
+        IncrementStore.incrementsBelow(spark, stateDir, batchId + 1): _*)
       graft.ops.Privacy.dpGroupCounts(union, col("un"), col("grp"),
           epsilonMilli, maxGroupsPerUnit, tau,
           seed = seed + batchId.toInt)

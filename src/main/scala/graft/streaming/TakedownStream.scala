@@ -42,18 +42,11 @@ object TakedownStream {
       val spark = batch.sparkSession
       batch.select(col("doc").cast("long").as("doc"))
         .write.mode("overwrite").parquet(s"$stateDir/inc=$batchId")
-      // roll a crashed compaction forward BEFORE the listing (r17
+      // the listing rolls a crashed compaction forward first (r17
       // ADVICE): a bill computed over deleted-but-unrenamed sources
       // would silently drop committed takedown requests
-      IncrementStore.recoverStore(spark, stateDir)
-      val path = new org.apache.hadoop.fs.Path(stateDir)
-      val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val incs = fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter(_.getPath.getName.stripPrefix("inc=").toLongOption
-          .forall(_ <= batchId))
-        .map(_.getPath.toString).sorted
-      val removedIds = spark.read.parquet(incs: _*)
+      val removedIds = spark.read.parquet(
+          IncrementStore.incrementsBelow(spark, stateDir, batchId + 1): _*)
         .select(col("doc").as("__rdoc")).distinct()
       val flagged = packed.join(removedIds, doc === col("__rdoc"), "left")
       graft.ops.Chunking.takedownAudit(flagged, grp, bin, nTok,

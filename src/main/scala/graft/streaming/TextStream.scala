@@ -139,14 +139,16 @@ object TextStream {
       // released before the trigger returns — no state accrues in memory
       val sig = Dedup.minhashSignaturesRowwise(batch, col("doc_id"),
         col("text"), n, k).persist(lvl)
-      val adm = Dedup.admitWithSig(batch, col("doc_id"), sig, idx, k,
-        bands, minAgree).persist(lvl)
-      adm.write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
-      sig.join(adm.select(col("doc_id").as("__adm")),
-          col("doc") === col("__adm"), "left_semi")
-        .write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
-      adm.unpersist(false)
-      sig.unpersist(false)
+      try {
+        val adm = Dedup.admitWithSig(batch, col("doc_id"), sig, idx, k,
+          bands, minAgree).persist(lvl)
+        try {
+          adm.write.mode("overwrite").parquet(s"$admittedDir/batch=$batchId")
+          sig.join(adm.select(col("doc_id").as("__adm")),
+              col("doc") === col("__adm"), "left_semi")
+            .write.mode("overwrite").parquet(s"$indexDir/inc=$batchId")
+        } finally adm.unpersist(false)
+      } finally sig.unpersist(false)
       ()
     }
     arrivals.writeStream
@@ -215,27 +217,13 @@ object TextStream {
     IncrementStore.forgetDocIncrements(spark, indexDir, upToBatchId, ids,
       "TextStream.forgetDocs")
 
-  /** Every index increment a trigger may read: seeds (non-numeric tags)
-    * plus numeric increments STRICTLY below `batchId`. Hadoop FS, not
-    * java.io — the directory lives on HDFS/object store at production.
-    * Recovery runs FIRST (r17 ADVICE): a compactor that died between
-    * source deletion and the rename must not leave this restarted gate
-    * admitting against a partial index — the manifested tmp rolls
-    * forward before the listing. */
+  /** Every index increment a trigger may read: seeds plus numeric
+    * increments STRICTLY below `batchId`, crash recovery first
+    * ([[IncrementStore.incrementsBelow]]); an empty (doc, s0…) frame on a
+    * cold start. */
   private def readIndexBelow(spark: org.apache.spark.sql.SparkSession,
       indexDir: String, k: Int, batchId: Long): DataFrame = {
-    IncrementStore.recoverStore(spark, indexDir)
-    val path = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val incs =
-      if (!fs.exists(path)) Seq.empty[String]
-      else fs.listStatus(path).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("inc="))
-        .filter { s =>
-          val tag = s.getPath.getName.stripPrefix("inc=")
-          tag.toLongOption.forall(_ < batchId)
-        }
-        .map(_.getPath.toString).sorted
+    val incs = IncrementStore.incrementsBelow(spark, indexDir, batchId)
     if (incs.isEmpty)
       spark.range(0).select(
         (col("id").as("doc") +: (0 until k).map(j => col("id").as(s"s$j"))): _*)

@@ -8,9 +8,14 @@ Usage: python3 tools/oracle_check.py <sfDir> <outDir>
      columns sorted by name, rows sorted by all columns, exact value match
      (floats compared bit-exact AND with 1e-9 relative tolerance, both
      reported, so rounding-discipline violations are visible).
+
+With SPARK_GRAFT_VERIFY_ONLY set (the comma-separated subset Verify
+dumped), every query outside it prints SKIPPED and is not counted; a
+listed query with no dump is still a FAIL.
 """
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -47,8 +52,15 @@ def main(sf_dir, out_dir):
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_pass = n_fail = 0
+    # parsed as graft.Verify parses it: split on commas, trim each name
+    only = os.environ.get("SPARK_GRAFT_VERIFY_ONLY")
+    only = None if only is None else {n.strip() for n in only.split(",")}
+    n_pass = n_fail = n_skip = 0
     for name, sql in sorted(oracle.items()):
+        if only is not None and name not in only:
+            print(f"SKIPPED {name}")
+            n_skip += 1
+            continue
         try:
             spark_rel = con.sql(f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
             scols, srows = spark_rel.columns, spark_rel.fetchall()
@@ -87,7 +99,8 @@ def main(sf_dir, out_dir):
             tag = f" ({inexact} tolerance-only cells — tighten rounding!)" if inexact else ""
             print(f"PASS {name}: {len(srows2)} rows{tag}")
             n_pass += 1
-    print(f"== {n_pass} pass / {n_fail} fail ==")
+    skipped = "" if only is None else f" / {n_skip} skipped"
+    print(f"== {n_pass} pass / {n_fail} fail{skipped} ==")
     return 1 if n_fail else 0
 
 
