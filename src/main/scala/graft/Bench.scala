@@ -57,7 +57,10 @@ object Bench {
     * iterative query accumulated for the session's lifetime — by q74 (which
     * sorts last) the block manager was the bottleneck, not the query. Each
     * timed query starts storage-cold and pays its own cache build. The
-    * one purge every harness (Bench, Verify, Profile) uses. */
+    * one purge every harness (Bench, Verify, Profile) uses — the backstop
+    * behind the ownership rule of [[graft.ops.Waist]] (ops free the
+    * waists they do not return; the consumer frees the rest with one
+    * `Waist.release(result)`), not what keeps a session healthy. */
   private[graft] def purgeStorage(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

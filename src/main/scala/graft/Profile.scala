@@ -21,7 +21,9 @@ import scala.jdk.CollectionConverters._
   *  - `stages`, `stage_run_s`: completed stages and their summed
   *    executor run time;
   *  - `exec.tasks`, `exec.task_cpu_s`, `exec.scan_mb`, `exec.shuffle_mb`:
-  *    tasks, executor cpu, input bytes and shuffle-write bytes.
+  *    tasks, executor cpu, input bytes and shuffle-write bytes;
+  *  - `ops.retained_mb`: block-manager storage the measured run leaves
+  *    behind, read before Profile's purge releases it.
   *
   * The measured run's stages, slowest first, go to stderr.
   *
@@ -154,6 +156,7 @@ object Profile {
     val gc = gcMs() - gc0
     val jitMs = jit.getTotalCompilationTime - jit0
     val cg = compiles.getCount - cg0
+    val retained = org.apache.spark.sql.GraftColumnBridge.storedBytes()
     listener.drain(spark, s"$name/drain")
     val st = listener.take(name)
     def r3(v: Double): Double = (v * 1000).round / 1000.0
@@ -165,7 +168,8 @@ object Profile {
       "exec.tasks" -> st.map(_.tasks).sum,
       "exec.task_cpu_s" -> r3(st.map(_.cpuNs).sum / 1e9),
       "exec.scan_mb" -> r3(st.map(_.inBytes).sum / mb),
-      "exec.shuffle_mb" -> r3(st.map(_.swBytes).sum / mb))
+      "exec.shuffle_mb" -> r3(st.map(_.swBytes).sum / mb),
+      "ops.retained_mb" -> r3(retained / mb))
     System.err.println(s"[profile] $name " +
       rec.map { case (k, v) => s"$k=$v" }.mkString(" "))
     System.err.println("  runS  cpuS tasks shufReadMB shufWriteMB  inputMB  stage")

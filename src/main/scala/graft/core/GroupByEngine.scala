@@ -70,9 +70,9 @@ object GroupByEngine {
       filtered.select(cols.map(col): _*)
     } else {
       require(aggs.nonEmpty, "agg_list must be non-empty when aggregate=true")
-      val aggCols = Translator.aggColumns(aggs)
       combine match {
         case CombineMode.Merged =>
+          val aggCols = Translator.aggColumns(aggs)
           filtered
             .groupBy(keys.map(col): _*)
             .agg(aggCols.head, aggCols.tail: _*)
@@ -80,12 +80,7 @@ object GroupByEngine {
           // Reference fidelity: per-shard aggregates, concatenated, shard
           // column dropped — duplicate keys across shards survive
           // (pa.concat_tables, parqueryd/controller.py:294).
-          val shard = "__graft_shard"
-          filtered
-            .withColumn(shard, input_file_name())
-            .groupBy((shard +: keys).map(col): _*)
-            .agg(aggCols.head, aggCols.tail: _*)
-            .drop(shard)
+          groupbyDfSharded(df, input_file_name(), keys, aggs, where)
       }
     }
   }

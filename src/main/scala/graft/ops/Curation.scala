@@ -203,21 +203,17 @@ object Curation {
     // discipline; the length floor upstream should make this rare).
     // Runs after DSIR (both are selection; ML is the sharper, costlier
     // filter) and before rebalance/dedup, the select-then-clean order.
-    // r20 (guide §3.3/§8 "decide with small rows"): the kept-id DECISION
-    // TABLE is materialized once (eager localCheckpoint — id-only, the
-    // slimmest possible intermediate). The double-LM ladder behind it is
-    // 2·(2·order−1) hash joins; left lazy it re-planned and re-ran inside
-    // EVERY downstream stage's lineage (funnel's moore_lewis + exact +
-    // fuzzy branches each nested the whole ladder — q301's plan was
-    // 200 KB and Catalyst time dominated the query). At 100 TB an id
-    // list is exactly what a selection stage should persist.
+    // The kept-id DECISION TABLE is one Waist (id-only, the slimmest
+    // intermediate; a leaf of every later stage, so the consumer's
+    // release of the result frees it). Left lazy, the 2·(2·order−1)-join
+    // double-LM ladder re-ran inside EVERY downstream stage's lineage
+    // (q301's plan was 200 KB and Catalyst time dominated the query).
     val mlStage = mlRefs.map { case (inRef, inTxt, genRef, genTxt) =>
       "moore_lewis" -> selected.join(
-        TextAnalysis.mooreLewis(selected, id, text, inRef, inTxt,
+        Waist.cut(TextAnalysis.mooreLewis(selected, id, text, inRef, inTxt,
             genRef, genTxt, order = cfg.mlOrder)
           .filter(col("ml_micro") < cfg.mlMaxMicro)
-          .select(col("id").as("__mlk"))
-          .localCheckpoint(true),
+          .select(col("id").as("__mlk"))),
         id === col("__mlk"), "left_semi")
     }
     val mlSelected = mlStage.map(_._2).getOrElse(selected)

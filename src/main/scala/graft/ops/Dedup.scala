@@ -593,22 +593,16 @@ object Dedup {
   def admitStep(batch: DataFrame, id: Column, text: Column,
       index: DataFrame, n: Int, k: Int, bands: Int,
       minEstJaccard: Double): DataFrame = {
-    // signatures persist only for the DURATION of this call: the kill
-    // passes reference them six times (band self-join sides, two verify
-    // sides, the index candidate join — recomputing the MinHash per
-    // reference was measured at >100 cpu-s per wave at sf0.1; the
-    // dupClusters materialize-once lesson), so the dead-id list is
-    // computed EAGERLY under the persisted signatures and the storage is
-    // released before returning — a long-lived batch session calling
-    // admitStep repeatedly accumulates nothing (r16 ADVICE; the
-    // streaming gate and the wave fold manage their own persistence via
-    // [[admitWithSig]]). The returned plan is one anti hash join against
-    // the lineage-truncated dead-id list.
+    // signatures persist only while the dead-id waist is cut: the kill
+    // passes reference them six times (recomputing the MinHash per
+    // reference was measured at >100 cpu-s per wave at sf0.1). The
+    // returned plan is one anti hash join against that waist.
     val sig = minhashSignaturesRowwise(batch, id, text, n, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dead = deadIdsWithSig(sig, index, k, bands,
-      math.ceil(minEstJaccard * k - 1e-9).toInt).localCheckpoint(true)
-    sig.unpersist(false)
+    val dead =
+      try Waist.cut(deadIdsWithSig(sig, index, k, bands,
+        math.ceil(minEstJaccard * k - 1e-9).toInt))
+      finally sig.unpersist(false)
     batch.join(dead, id === col("i"), "left_anti")
   }
 
@@ -663,11 +657,11 @@ object Dedup {
     * after its original dies, which [[graft.streaming.TextStream.corpusGate]]
     * (frozen index, exact-signature state only) documents as its non-goal.
     *
-    * Each wave's survivors and index increment are EAGERLY
-    * localCheckpoint-ed (the dupClusters iteration hygiene): the index
-    * for wave w+1 references them, and a lazy fold nests every earlier
-    * wave's admission tree in the next wave's plan — blocks release via
-    * the session's persistent-RDD sweep or session end; at production
+    * Each wave's survivors and index increment are one [[Waist]] (the
+    * dupClusters iteration hygiene): the index for wave w+1 references
+    * them, and a lazy fold nests every earlier wave's admission tree in
+    * the next wave's plan. They are leaves of the returned plan, so the
+    * caller's `Waist.release` of the result frees them; at production
     * each increment is WRITTEN per wave instead (the streaming form's
     * parquet increments).
     *
@@ -699,11 +693,11 @@ object Dedup {
       // doc serialize — admitted text still re-attaches by one semi
       // join at the end.
       val dead = deadIdsWithSig(sig, idx, k, bands, minAgree)
-      val chk = batch.select(id.as("__id"))
-        .join(dead, col("__id") === col("i"), "left_anti")
-        .join(sig, col("__id") === col("doc"), "left")
-        .localCheckpoint(true)
-      sig.unpersist(false)
+      val chk =
+        try Waist.cut(batch.select(id.as("__id"))
+          .join(dead, col("__id") === col("i"), "left_anti")
+          .join(sig, col("__id") === col("doc"), "left"))
+        finally sig.unpersist(false)
       val inc = chk.filter(col("doc").isNotNull)
         .select(("doc" +: (0 until k).map(j => s"s$j")).map(col): _*)
       (idx.unionByName(inc), chk.select("__id"))
@@ -719,7 +713,7 @@ object Dedup {
     * or a checkpoint-policy fix lands ONCE): `step(index, batch)` admits
     * one wave against the running index and returns the grown index and
     * the wave's admitted part; each step is responsible for its own
-    * EAGER lineage truncation (localCheckpoint — the dupClusters
+    * EAGER lineage truncation ([[Waist.cut]] — the dupClusters
     * lazy-chaining trap: a lazy fold nests every earlier wave's
     * admission tree inside the next wave's plan, >200 driver cpu-s at
     * sf0.1 before eager truncation; persist alone does not truncate the
@@ -728,44 +722,34 @@ object Dedup {
   private def foldWaves(arrivals: DataFrame, wave: Column, maxWaves: Int,
       caller: String, seed: DataFrame)(
       step: (DataFrame, DataFrame) => (DataFrame, DataFrame)): Seq[DataFrame] = {
-    // r19 (optimization round): materialize the two frames the fold
-    // re-reads, ONCE each, before the per-wave loop.
-    //  - `tagged` (the wave-keyed arrivals) is re-evaluated by the wave
-    //    listing below AND by every per-wave `filter(__w = w)` — for the
-    //    media gate that re-ran the FULL codec decode once per wave
-    //    (q300's arrival plan is a Dataset.map the optimizer cannot prune
-    //    through), 4 decodes of the whole corpus for a 3-wave replay;
-    //  - `seed` is referenced by every wave's kill joins (twice per wave
-    //    in the text form: banding side + verify side) and was a raw lazy
-    //    plan — q288 recomputed the seed-corpus MinHash ~6× per call.
-    // One eager localCheckpoint each replaces those re-evaluations with
-    // block-manager reads; blocks release on session purge/end exactly
-    // like the per-wave increments. 100 TB analogue: waves arrive as
-    // ALREADY-materialized parquet microbatches and the index is a stored
-    // table — the batch replay should price them the same way.
-    val tagged = arrivals.withColumn("__w", wave.cast("long"))
-      .localCheckpoint(true)
-    val waves = tagged.select(col("__w")).distinct()
-      .orderBy("__w").collect().map(_.getLong(0)).toSeq
-    require(waves.nonEmpty, s"$caller: no arrival waves")
-    require(waves.size <= maxWaves,
-      s"$caller: ${waves.size} waves exceed the $maxWaves valve — " +
-        "waves are release snapshots or microbatch replays, never data-sized")
-    val seedChk = seed.localCheckpoint(true)
-    val (_, parts) = waves.foldLeft((seedChk, Seq.empty[DataFrame])) {
-      case ((idx, acc), w) =>
+    // Two waists, cut once before the per-wave loop (r19):
+    //  - `tagged` (the wave-keyed arrivals) is re-read by the wave listing
+    //    AND every per-wave `filter(__w = w)` — for the media gate that
+    //    re-ran the FULL codec decode once per wave (q300);
+    //  - `seed` is referenced by every wave's kill joins — q288
+    //    recomputed the seed-corpus MinHash ~6× per call.
+    // Both are dead weight once the fold is done; each wave's part is the
+    // step's own waist, returned — or released here if the fold fails.
+    val tagged = Waist.cut(arrivals.withColumn("__w", wave.cast("long")))
+    var held = Seq(tagged)
+    var parts = Seq.empty[DataFrame]
+    try {
+      val waves = tagged.select(col("__w")).distinct()
+        .orderBy("__w").collect().map(_.getLong(0)).toSeq
+      require(waves.nonEmpty, s"$caller: no arrival waves")
+      require(waves.size <= maxWaves,
+        s"$caller: ${waves.size} waves exceed the $maxWaves valve — " +
+          "waves are release snapshots or microbatch replays, never data-sized")
+      held :+= Waist.cut(seed)
+      waves.foldLeft(held.last) { (idx, w) =>
         val (grown, part) = step(idx, tagged.filter(col("__w") === w))
-        (grown, acc :+ part)
-    }
-    // r20 (ADVICE): release the fold-scoped inputs once the fold is done —
-    // every step's returned part is its OWN eager checkpoint, so the
-    // tagged-arrivals and seed blocks are dead weight from here on; in a
-    // long-lived session without the harness's between-query purge,
-    // repeated evolving-gate calls would otherwise accumulate them in the
-    // block manager for the session's lifetime.
-    releaseCheckpoint(tagged)
-    releaseCheckpoint(seedChk)
-    parts
+        parts :+= part
+        grown
+      }
+      parts
+    } catch {
+      case e: Throwable => parts.foreach(Waist.release); throw e
+    } finally held.foreach(Waist.release)
   }
 
   /** [[admitStep]]'s EMBEDDING twin — one admission step of the evolving
@@ -834,8 +818,8 @@ object Dedup {
       else refIndex.withColumn("doc", lit(null).cast("long"))
     val parts = foldWaves(arrivals, wave, maxWaves, "admitWavesEmbed",
         seed) { (idx, batch) =>
-      val adm = admitStepEmbed(batch, id, vec, idx, bits, minCosine)
-        .localCheckpoint(true)
+      val adm = Waist.cut(
+        admitStepEmbed(batch, id, vec, idx, bits, minCosine))
       (idx.unionByName(embedIndexOf(adm, id, vec, bits)), adm)
     }
     parts.reduce(_.unionByName(_)).drop("__w")
@@ -914,8 +898,7 @@ object Dedup {
     val seed = refIndex.select(col("doc"), col("kind"), col("phash"))
     val parts = foldWaves(hashes, wave, maxWaves, "admitWavesMedia",
         seed) { (idx, batch) =>
-      val adm = admitStepMedia(batch.drop("__w"), idx, maxHamming)
-        .localCheckpoint(true)
+      val adm = Waist.cut(admitStepMedia(batch.drop("__w"), idx, maxHamming))
       (idx.unionByName(adm), adm)
     }
     parts.reduce(_.unionByName(_))
@@ -993,9 +976,9 @@ object Dedup {
 
   /** [[lshAudit]] across a FAMILY of band configs with the expensive
     * passes shared: the exact-Jaccard truth join and the k-min signature
-    * table are computed ONCE, `localCheckpoint`ed (fresh-stats leaf — the
-    * q215 lesson), and each config re-bands the materialized signatures
-    * and re-runs only the (cheap) candidate self-join + audit join. The
+    * table are computed ONCE, each cut as a [[Waist]], and each config
+    * re-bands the materialized signatures and re-runs only the (cheap)
+    * candidate self-join + audit join. The
     * r12 bench measured three independent `lshAudit` calls at 13.5 cpu-s
     * and a LINEAR 10.6× scale factor for q223 — the truth pass is ~2/3 of
     * that work and this shares it at any scale. Output: one [[lshAudit]]
@@ -1003,11 +986,8 @@ object Dedup {
   def lshAuditSweep(df: DataFrame, id: Column, text: Column, n: Int, k: Int,
       bandsList: Seq[Int], minJaccard: Double): DataFrame = {
     require(bandsList.nonEmpty, "need at least one band config")
-    import org.apache.spark.sql.GraftColumnBridge.withFreshStats
-    val truth = withFreshStats(
-      auditTruth(df, id, text, n, minJaccard).localCheckpoint(true))
-    val sig = withFreshStats(
-      auditSignatures(df, id, text, n, k).localCheckpoint(true))
+    val truth = Waist.cut(auditTruth(df, id, text, n, minJaccard))
+    val sig = Waist.cut(auditSignatures(df, id, text, n, k))
     bandsList.map { b =>
       auditReport(truth,
           lshCandidates(sig, k, b).withColumn("__c", lit(1)))
@@ -1349,17 +1329,6 @@ object Dedup {
     incoming.join(losers, id.cast("long") === col("__bid"), "left_anti")
   }
 
-  /** Release the persisted blocks behind a `localCheckpoint`ed frame (or a
-    * projection of one). `Dataset.unpersist` only covers `cache()`; the
-    * checkpoint's blocks belong to the materialized RDD inside the plan's
-    * [[org.apache.spark.sql.execution.LogicalRDD]] — without this, every
-    * round of an iterative operator leaks its blocks for the life of the
-    * session (the round-1 bench killer). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
-
   /** Transitive near-dup clusters from a pair list: connected components by
     * min-label propagation with pointer halving — each round takes the min
     * over neighbours' labels, then jumps to the label's own label
@@ -1368,115 +1337,83 @@ object Dedup {
     * minimum id — the canonical representative each duplicate collapses to.
     *
     * Iteration hygiene (the round-1 lessons, each load-bearing):
-    *  - the pair list is materialized ONCE up front (`localCheckpoint`);
-    *    every round joins the materialized edges, recomputing nothing;
-    *  - each round's labels are eagerly checkpointed — lazy chaining would
-    *    reference the previous round twice and grow the plan exponentially;
-    *  - the PREVIOUS round's blocks are released as soon as the next round
-    *    materializes, so a full run holds at most two rounds of labels —
-    *    round 1 held every round of every pass and died of block-manager
-    *    bloat, not compute;
+    *  - the pair list and each round's labels are [[Waist]]s: every round
+    *    joins materialized edges, and lazy chaining would reference the
+    *    previous round twice and grow the plan exponentially;
+    *  - the PREVIOUS round's waist is released as soon as the next one
+    *    materializes, and the edges on every exit: a run holds at most two
+    *    rounds of labels (round 1 held every round of every pass and died
+    *    of block-manager bloat, not compute). The result is the caller's;
     *  - convergence detection rides INSIDE the materialization job: a
-    *    side-effect accumulator column tallies `cluster != prev` rows while
-    *    the checkpoint's own job runs, so each round is exactly ONE Spark
-    *    job (the round-3 shape spent a second job on an `isEmpty` probe of
-    *    the fresh blocks — pure scheduling overhead at scale, and 50 % of
-    *    q74's wall time at sf0.1). Accumulator semantics are safe here:
-    *    task retries can only over-count, which at worst costs one extra
-    *    (idempotent) round — never a premature exit;
-    *  - TWO pointer-halving hops are batched per materialization (the
-    *    second hop jumps through the first hop's own mapping, i.e. label
-    *    ~ parent^4 per round), roughly halving the round count for the
-    *    same per-round shuffle structure. The identical hop subtrees
-    *    collapse to a single computed Exchange via ReuseExchange.
+    *    side-effect accumulator column tallies `cluster != prev` rows, so
+    *    each round is exactly ONE Spark job (a separate `isEmpty` probe was
+    *    50 % of q74's wall time at sf0.1). Task retries can only
+    *    over-count, which at worst costs one extra (idempotent) round;
+    *  - TWO pointer-halving hops are batched per materialization (label
+    *    ~ parent^4 per round), roughly halving the round count; the
+    *    identical hop subtrees collapse to one Exchange via ReuseExchange.
     *
-    * The result itself is checkpointed; at 100 TB each round is one shuffle
-    * of the label table on node id — the standard large-graph CC shape.
-    *
-    * Fault-tolerance modes: the default `localCheckpoint` truncates lineage
+    * Fault-tolerance modes: the default local waist truncates lineage
     * into EXECUTOR memory/disk — fastest, but an executor loss mid-iteration
     * kills the job (restart, never wrong answers). Passing `checkpointDir`
-    * selects RELIABLE checkpoints at the same cadence: every round's label
-    * table is persisted to that (HDFS/object-store) directory, so the
-    * computation survives executor loss — the right mode for very long
-    * chains at 100 TB. The caller owns the directory's lifecycle (checkpoint
-    * files outlive the call by design: the returned DataFrame reads from
-    * them); set `spark.cleaner.referenceTracking.cleanCheckpoints=true` for
-    * GC-driven cleanup. */
+    * cuts every round as a RELIABLE waist under that (HDFS/object-store)
+    * directory, so the computation survives executor loss. The caller owns
+    * the directory (the returned DataFrame reads from its files); set
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` for GC cleanup. */
   def dupClusters(pairs: DataFrame, maxIter: Int = 20,
       checkpointDir: Option[String] = None): DataFrame = {
     val sc = pairs.sparkSession.sparkContext
-    // setCheckpointDir mutates SparkContext state shared beyond this call;
-    // every checkpoint here is EAGER (materialized before return), so the
-    // previous directory can be restored on exit. When no directory was
-    // set before and the context offers no public unset, the setting does
-    // outlive the call — documented global side effect.
-    val prevCheckpointDir = sc.getCheckpointDir
-    checkpointDir.foreach(sc.setCheckpointDir)
-    try {
-    // withFreshStats: checkpoint PROPAGATES the child plan's Statistics,
-    // and in this loop round N's estimate is a product over round N−1's —
-    // the inherited sizeInBytes BigInt squares per generation and the
-    // driver's stats walk goes exponential (measured 0.6→1.9→7.4→43.5 s
-    // per snap at 10× bench scale before the reset; see
-    // GraftColumnBridge.withFreshStats). snap returns (plan frame, RAW
-    // checkpointed frame): the raw one is what releaseCheckpoint can
-    // find the persisted blocks through.
-    def snap(df: DataFrame): (DataFrame, DataFrame) = {
-      val ck = if (checkpointDir.isDefined) df.checkpoint(eager = true)
-        else df.localCheckpoint(true)
-      (org.apache.spark.sql.GraftColumnBridge.withFreshStats(ck), ck)
-    }
-    val (edges, edgesCk) = snap(pairs.select(col("i").as("a"), col("j").as("b"))
+    def snap(df: DataFrame): DataFrame = Waist.cut(df, checkpointDir)
+    val edges = snap(pairs.select(col("i").as("a"), col("j").as("b"))
       .union(pairs.select(col("j").as("a"), col("i").as("b")))
       .distinct())
-    // init = identity labels with the first neighbour-min round fused in
-    // (one groupBy): pair-shaped clusters are already final here and the
-    // loop only has to confirm convergence
-    var (labels, labelsCk) = snap(edges.groupBy(col("a").as("node"))
-      .agg(min("b").as("nbr_min"))
-      .select(col("node"), least(col("node"), col("nbr_min")).as("cluster")))
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val changed = sc.longAccumulator(s"dupClusters changed (round $iter)")
-      // nondeterministic so Catalyst never elides, duplicates, or reorders
-      // the side effect; the column itself is materialized with the
-      // checkpoint (1 byte/row) and pruned on read afterwards
-      val tally = udf { (c: Boolean) => if (c) changed.add(1L); c }
-        .asNondeterministic()
-      val nbrMin = edges.join(labels, col("b") === col("node"))
-        .groupBy(col("a")).agg(min("cluster").as("nbr_min"))
-      val once = labels.join(nbrMin, col("node") === col("a"), "left")
-        .select(col("node"), col("cluster").as("prev"),
-          least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("mid"))
-      val hop1 = once.as("l")
-        .join(once.select(col("node").as("rnode"), col("mid").as("rmid")).as("r"),
-          col("mid") === col("rnode"), "left")
-        .select(col("node"), col("prev"),
-          least(col("mid"), coalesce(col("rmid"), col("mid"))).as("mid2"))
-      val clusterExpr =
-        least(col("mid2"), coalesce(col("r2mid"), col("mid2")))
-      val (next, nextCk) = snap(hop1.as("h")
-        .join(hop1.select(col("node").as("r2node"), col("mid2").as("r2mid")).as("r2"),
-          col("mid2") === col("r2node"), "left")
-        .select(col("node"), clusterExpr.as("cluster"),
-          // coalesce guard: a NULL comparison (only possible if node ids /
-          // labels ever became nullable) must count as "changed" — Spark
-          // skips primitive-arg UDFs on null input, so an unguarded null
-          // here would silently not tally and could converge prematurely
-          tally(coalesce(col("prev") =!= clusterExpr, lit(true))).as("chg")))
-      converged = changed.value == 0L
-      releaseCheckpoint(labelsCk)
-      labels = next.select("node", "cluster")
-      labelsCk = nextCk
-      iter += 1
-    }
-    releaseCheckpoint(edgesCk)
-    labels
-    } finally {
-      if (checkpointDir.isDefined) prevCheckpointDir.foreach(sc.setCheckpointDir)
-    }
+    var labels: DataFrame = null
+    try {
+      // init = identity labels with the first neighbour-min round fused in
+      // (one groupBy): pair-shaped clusters are already final here and the
+      // loop only has to confirm convergence
+      labels = snap(edges.groupBy(col("a").as("node"))
+        .agg(min("b").as("nbr_min"))
+        .select(col("node"), least(col("node"), col("nbr_min")).as("cluster")))
+      var converged = false
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        val changed = sc.longAccumulator(s"dupClusters changed (round $iter)")
+        // nondeterministic so Catalyst never elides, duplicates, or reorders
+        // the side effect; the column itself is materialized with the
+        // checkpoint (1 byte/row) and pruned on read afterwards
+        val tally = udf { (c: Boolean) => if (c) changed.add(1L); c }
+          .asNondeterministic()
+        val nbrMin = edges.join(labels, col("b") === col("node"))
+          .groupBy(col("a")).agg(min("cluster").as("nbr_min"))
+        val once = labels.join(nbrMin, col("node") === col("a"), "left")
+          .select(col("node"), col("cluster").as("prev"),
+            least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("mid"))
+        val hop1 = once.as("l")
+          .join(once.select(col("node").as("rnode"), col("mid").as("rmid")).as("r"),
+            col("mid") === col("rnode"), "left")
+          .select(col("node"), col("prev"),
+            least(col("mid"), coalesce(col("rmid"), col("mid"))).as("mid2"))
+        val clusterExpr =
+          least(col("mid2"), coalesce(col("r2mid"), col("mid2")))
+        val next = snap(hop1.as("h")
+          .join(hop1.select(col("node").as("r2node"), col("mid2").as("r2mid")).as("r2"),
+            col("mid2") === col("r2node"), "left")
+          .select(col("node"), clusterExpr.as("cluster"),
+            // coalesce guard: a NULL comparison (only possible if node ids /
+            // labels ever became nullable) must count as "changed" — Spark
+            // skips primitive-arg UDFs on null input, so an unguarded null
+            // here would silently not tally and could converge prematurely
+            tally(coalesce(col("prev") =!= clusterExpr, lit(true))).as("chg")))
+        converged = changed.value == 0L
+        Waist.release(labels)
+        labels = next.select("node", "cluster")
+        iter += 1
+      }
+      labels
+    } catch {
+      case e: Throwable => Option(labels).foreach(Waist.release); throw e
+    } finally Waist.release(edges)
   }
 
   /** Quality-aware survivor selection over transitive dup clusters: keep

@@ -150,8 +150,8 @@ object Preference {
         b.cast("string"), winner.cast("string"))
       .select(col("lo"), col("hi"), col("wins_lo"), col("wins_hi"))
     // m²-valved sidecar collect — ONE corpus aggregation feeds it; the
-    // eager checkpoint shares that pass with the output join below
-    val cm = counts.localCheckpoint(true)
+    // waist shares that pass with the output join below
+    val cm = Waist.cut(counts)
     val rows = cm.orderBy("lo", "hi").collect()
     require(rows.nonEmpty, "bradleyTerry: no games")
     val models = rows.flatMap(r => Seq(r.getString(0), r.getString(1)))

@@ -781,7 +781,7 @@ object Sampling {
     * the sampled rows of `raw` with their integer `w_es` attached.
     *
     * Scale shape: the per-doc weight frame is trimmed to
-    * (id, group, weight) and localCheckpoint-ed EAGERLY so the expensive
+    * (id, group, weight) and cut as a Waist (eager) so the expensive
     * scoring pass (gram explode + hash) runs ONCE and feeds both the
     * bounds agg and the sample — leaving it lazy re-runs the whole
     * lineage under each (measured 11.4 s → single-pass at sf0.1). The
@@ -792,10 +792,9 @@ object Sampling {
       target: DataFrame, targetText: Column, group: Column, k: Int,
       nBuckets: Int = 1 << 16, seed: Int = 7, esSeed: Int = 11,
       maxWeight: Int = 64): DataFrame = {
-    val weighted = dsirWeights(raw, id, text, target, targetText,
+    val weighted = Waist.cut(dsirWeights(raw, id, text, target, targetText,
         nBuckets, seed)
-      .select(id.as("__rid"), group.as("__rg"), col("dsir_weight_u"))
-      .localCheckpoint()
+      .select(id.as("__rid"), group.as("__rg"), col("dsir_weight_u")))
     val bounds = weighted.agg(min("dsir_weight_u"), max("dsir_weight_u")).head
     val (lo, hi) =
       if (bounds.isNullAt(0)) (0L, 0L) else (bounds.getLong(0), bounds.getLong(1))
@@ -864,7 +863,7 @@ object Sampling {
   /** Core of [[globalRowNumber]] / [[ntileExact]]: [[rankedLocal]] plus
     * cumulative per-partition offsets. Returns the ranked frame (input
     * columns + `out`) and the total row count. The frame is
-    * `localCheckpoint`ed BEFORE the offset collect: range boundaries come
+    * cut as a Waist BEFORE the offset collect: range boundaries come
     * from a sampling pass whose seed moves with the RDD id, so without
     * pinning the partitioning the offsets could be counted against one
     * placement and applied to another (at 100 TB, checkpoint to reliable
@@ -872,7 +871,7 @@ object Sampling {
   private def rankedWithTotal(df: DataFrame, order: Seq[Column],
       out: String): (DataFrame, Long) = {
     val spark = df.sparkSession
-    val local = rankedLocal(df, order, out).localCheckpoint()
+    val local = Waist.cut(rankedLocal(df, order, out))
     val counts = local.groupBy("__pid").agg(count(lit(1)).as("__pc"))
       .collect().map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
     var acc = 0L
@@ -1015,10 +1014,10 @@ object Sampling {
           .otherwise(lit(0L)))
     // n_domains rows by construction — the collect is the valved sidecar
     // pattern (DSIR score table / IVF centroids), never corpus-sized.
-    // Eager localCheckpoint (the admitWaves discipline): the two-ladder
-    // corpus pass runs ONCE; both the driver collect and the output join
-    // read the materialized rows instead of re-deriving the lineage.
-    val perDomM = perDom.localCheckpoint(true)
+    // A Waist (the admitWaves discipline): the two-ladder corpus pass
+    // runs ONCE; both the driver collect and the output join read the
+    // materialized rows instead of re-deriving the lineage.
+    val perDomM = Waist.cut(perDom)
     val rows = perDomM.select(col("domain"), col("lambda_micro"))
       .orderBy("domain").collect()
     require(rows.nonEmpty, "doremiWeights: no domains")

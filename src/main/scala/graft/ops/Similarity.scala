@@ -1837,9 +1837,9 @@ object Similarity {
     * Scale shape: each iteration is one join of the edge list (≤ k·|V| by
     * construction when fed from [[knnGraph]]) against the score table plus
     * one partial-aggregable sum — no window, no global sort; `iters` is a
-    * small constant. Long chains at 100 TB: persist/checkpoint between
-    * iterations via `checkpointDir` (same lineage discipline as
-    * [[Dedup.dupClusters]]). */
+    * small constant. Long chains at 100 TB: `checkpointDir` cuts every
+    * iteration as a reliable [[Waist]] there (the [[Dedup.dupClusters]]
+    * discipline); the caller owns the directory. */
   def pagerank(edges: DataFrame, iters: Int, dampPct: Long = 85,
       scale: Long = 1000000L, checkpointDir: Option[String] = None): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
@@ -1859,10 +1859,7 @@ object Similarity {
         .select(col("v"),
           (lit(base) + expr(s"$dampPct * coalesce(__s, 0L) DIV 100"))
             .as("pr"))
-      checkpointDir.foreach { dir =>
-        pr.sparkSession.sparkContext.setCheckpointDir(dir)
-        pr = pr.checkpoint(eager = false)
-      }
+      if (checkpointDir.isDefined) pr = Waist.cut(pr, checkpointDir)
     }
     pr
   }

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
-import graft.ops.{Chunking, Curation, Dedup, ExactRound, Layout, Preference, Sampling, TextAnalysis => TA}
+import graft.ops.{Chunking, Curation, Dedup, ExactRound, Layout, Preference, Sampling, TextAnalysis => TA, Waist}
 import QueryUtil._
 
 /** Deterministic sampling/splitting over the `documents` table — the
@@ -1263,10 +1263,10 @@ object SamplingQueries {
         concat(withRepl, lit("\u0001\u0007"))).otherwise(withRepl)
       val planted = t(s, d, "documents")
         .select(col("doc_id"), col("lang"), damaged.as("text2"))
-      val clean = Curation.hygiene(planted, col("text2"), "text3",
+      val clean = Waist.cut(Curation.hygiene(planted, col("text2"), "text3",
           minWordsPerLine = 4, maxReplRatio = 0.004)
         .select(col("doc_id"), col("lang"),
-          regexp_replace(col("text3"), "\n", " ").as("text"))
+          regexp_replace(col("text3"), "\n", " ").as("text")))
         // r20 (guide §3.3/§5, the q185 pattern): eager plan truncation at
         // the hygiene/curate waist. The planted-damage expression plus the
         // full hygiene regex chain is a huge expression TREE, and every
@@ -1275,7 +1275,6 @@ object SamplingQueries {
         // codegen + JIT time dominated the query (StageProbe: wall 3.6 s,
         // stage time 1.0 s). Checkpointing the slim cleaned frame makes
         // downstream plans reference a plain column instead.
-        .localCheckpoint(true)
       Curation.curate(clean, col("doc_id"), col("text"), col("lang"),
           Curation.Config(langFracs = LangFracs))
         .groupBy("split")

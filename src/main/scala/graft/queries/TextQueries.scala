@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.PortableHash
-import graft.ops.{Dedup, ExactRound, Sampling, Similarity => Sim, TextAnalysis => TA}
+import graft.ops.{Dedup, ExactRound, Sampling, Similarity => Sim, TextAnalysis => TA, Waist}
 import QueryUtil._
 
 /** Training-data text operators over the `documents` table: exact/fuzzy
@@ -271,7 +271,7 @@ object TextQueries {
       val m = greatest(length(col("ta")), length(col("tb")))
       val sim = ExactRound.ratioRoundedCol(
         m - levenshtein(col("ta"), col("tb")), m, 6)
-      Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
+      Waist.cut(Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
           n = 3, minJaccard = 0.5)
         .select("i", "j", "jacc_micro")
         .join(docs.select(col("doc_id").as("i"), col("text").as("ta")), "i")
@@ -279,13 +279,12 @@ object TextQueries {
         .select(col("i"), col("j"),
           (col("jacc_micro").cast("double") / 1e6).as("jaccard"),
           levenshtein(col("ta"), col("tb")).cast("long").as("edit_dist"),
-          sim.as("edit_sim"), (sim >= 0.8).as("verified"))
+          sim.as("edit_sim"), (sim >= 0.8).as("verified")))
         // r20 (guide §2.4 remove recomputation): orderBy's range-partition
         // SAMPLING pass re-executes its child, so the O(len²) Levenshtein
         // projection ran TWICE (StageProbe: two identical 2.1 s stages
         // over the same 5000-pair exchange). Materialize the verified
         // pair table (pair-sized, slim) once; the sort reads blocks.
-        .localCheckpoint(true)
         .orderBy("i", "j")
     }),
 
@@ -944,7 +943,7 @@ object TextQueries {
       // same ~3.6 s q169 pays on this corpus size). The 100 TB analogue is
       // checkpointing the deduped corpus before the statistics passes —
       // CCNet's own layout.
-      // r19 (optimization round): cache() → eager localCheckpoint. cache
+      // r19 (optimization round): cache() → eager checkpoint (a Waist). cache
       // cuts EXECUTION but leaves the full paragraph-dedup lineage inside
       // every consumer's LOGICAL plan — with ~8 references (nbFit's two
       // collects, nbPredict, the 5 count tables, the slot stream) the
@@ -953,13 +952,12 @@ object TextQueries {
       // lineage to an in-memory scan: same materialize-once semantics,
       // driver-side planning drops with it (guide §3.3: very wide plans —
       // materialize the intermediate to truncate).
-      val withLang = deduped
+      val withLang = Waist.cut(deduped
         .join(planted.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .select(col("doc_id"), col("lang"),
           when(pmod(col("doc_id"), lit(7)) =!= 1,
             concat(col("rb"), lit(" lm_"), col("lang")))
-            .otherwise(col("rb")).as("mtext"))
-        .localCheckpoint(true)
+            .otherwise(col("rb")).as("mtext")))
       val model = TA.nbFit(withLang.filter(pmod(col("doc_id"), lit(5)) =!= 0),
         col("lang"), col("mtext"), nBuckets = 64, seed = 11)
       val pred = TA.nbPredict(withLang, col("doc_id"), col("mtext"), model)

@@ -1,6 +1,10 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 
 /** Bridge into `private[sql] classic.ExpressionUtils` so graft's native
   * Catalyst expressions can be wrapped as `Column`s WITHOUT the function
@@ -9,29 +13,34 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * GraftExtensions-enabled session just to build a column is a needless
   * trap. The well-trodden pattern for Spark expression libraries (one
   * object in the `org.apache.spark.sql` package, nothing else); only
-  * public Spark jars are touched. */
+  * public Spark jars are touched. [[graft.ops.Waist]] uses the same door
+  * for Spark-internal storage, statistics and checkpoint state. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Re-wrap a (materialized, e.g. localCheckpoint'ed) DataFrame as a
-    * fresh LogicalRDD leaf WITHOUT inherited statistics.
-    *
-    * Why this must exist: `Dataset.localCheckpoint` propagates the child
-    * plan's `Statistics` into the LogicalRDD it returns. In an ITERATIVE
-    * algorithm that checkpoints every round (connected components, label
-    * propagation), round N's size estimate is a PRODUCT over round N−1's
-    * leaf estimates, so the inherited `sizeInBytes` BigInt roughly
-    * squares per generation — after ~8 rounds the driver burns minutes
-    * inside `SizeInBytesOnlyStatsPlanVisitor` doing Toom-Cook multiplies
-    * on million-digit integers (measured: snap wall 0.6 s → 1.9 → 7.4 →
-    * 43.5 on consecutive rounds at 10× bench scale). Dropping the origin
-    * stats resets the leaf to `defaultSizeInBytes`, which bounds every
-    * round's stats walk; the iteration tables are shuffle-joined either
-    * way at scale, so no useful broadcast decision is lost. */
-  def withFreshStats(df: Dataset[Row]): Dataset[Row] = {
+  /** Memory plus disk bytes of RDD blocks (one RDD's, or all): a
+    * synchronous ask to the block-manager master, so a finished job's
+    * blocks count (`getRDDStorageInfo` is listener-fed and can lag). */
+  def storedBytes(rddId: Option[Int] = None): Long =
+    org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus
+      .iterator.flatMap(_.rddBlocks)
+      .collect { case (RDDBlockId(r, _), b) if rddId.forall(_ == r) =>
+        b.memSize + b.diskSize }
+      .sum
+
+  /** `df` (a checkpointed frame: one [[LogicalRDD]] leaf) with the leaf's
+    * `sizeInBytes` set to `bytes`; same RDD, partitioning and
+    * constraints. */
+  def withSize(df: Dataset[Row], bytes: Long): Dataset[Row] = {
     val cs = df.sparkSession.asInstanceOf[classic.SparkSession]
-    cs.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
+    val lr = df.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    classic.Dataset.ofRows(cs,
+      lr.copy()(cs, Some(Statistics(BigInt(bytes))), Some(lr.constraints)))
   }
+
+  /** Sets the context's checkpoint directory to exactly `dir`, also to
+    * none, which `SparkContext` offers no public way to do. */
+  def restoreCheckpointDir(sc: SparkContext, dir: Option[String]): Unit =
+    sc.checkpointDir = dir
 }

@@ -34,7 +34,7 @@ class HarnessSpec extends AnyFunSuite {
       assert(rec != null, n)
       Seq("wall", "cpu", "jvm.gc_ms", "jvm.jit_ms", "codegen.compiles",
         "stages", "stage_run_s", "exec.tasks", "exec.task_cpu_s",
-        "exec.scan_mb", "exec.shuffle_mb").foreach { k =>
+        "exec.scan_mb", "exec.shuffle_mb", "ops.retained_mb").foreach { k =>
         assert(rec.has(k) && rec.get(k).isNumber, s"$n.$k")
       }
       assert(rec.get("wall").asDouble > 0, n)

@@ -91,10 +91,13 @@ class OpsSpec extends AnyFunSuite {
     val out = Dedup.dupClusters(pairs)
     val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
-    // iteration hygiene: edges + every superseded round were unpersisted;
-    // at most the final (result) checkpoint may remain
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"leaked checkpoint RDDs: $leaked")
+    // iteration hygiene: edges + every superseded round were released
+    // inside the call; only the result's own waist remains, and the
+    // consumer's one release frees it
+    def held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.size === 1, s"checkpoint RDDs held after the call: $held")
+    Waist.release(out)
+    assert(held.isEmpty, s"leaked checkpoint RDDs: $held")
   }
 
   test("scrub: redaction and normalization edge cases") {

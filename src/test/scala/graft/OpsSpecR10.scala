@@ -442,6 +442,37 @@ class OpsSpecR10 extends AnyFunSuite {
       99L -> 1255000L))
   }
 
+  test("pagerank reliable-checkpoint mode: same scores, files under the " +
+    "given dir, the context's checkpoint dir left as it was") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 99L), (2L, 99L), (3L, 99L), (99L, 1L), (1L, 2L))
+      .toDF("i", "j")
+    def scores(dir: Option[String]) =
+      Similarity.pagerank(edges, 3, checkpointDir = dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val local = scores(None)
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def files(f: java.io.File): Int =
+      if (f.isDirectory) f.listFiles().map(files).sum else 1
+    // no context dir before the call: none after it
+    org.apache.spark.sql.GraftColumnBridge.restoreCheckpointDir(sc, None)
+    val dir1 = tmp("graft-pr-reliable")
+    assert(scores(Some(dir1)) === local, "both modes must agree")
+    assert(sc.getCheckpointDir.isEmpty, sc.getCheckpointDir)
+    assert(files(new java.io.File(dir1)) > 0, "no checkpoint files written")
+    // a context dir set beforehand survives the call
+    val prevDir = tmp("graft-pr-prev")
+    sc.setCheckpointDir(prevDir)
+    val before = sc.getCheckpointDir
+    val dir2 = tmp("graft-pr-reliable")
+    assert(scores(Some(dir2)) === local)
+    assert(sc.getCheckpointDir === before)
+    assert(files(new java.io.File(dir2)) > 0, "no checkpoint files written")
+    assert(files(new java.io.File(prevDir)) === 0,
+      "checkpoint files leaked into the context's dir")
+  }
+
   test("knnConfusion: well-separated label clusters land on the diagonal") {
     import spark.implicits._
     // two tight clusters in one (+,+) bucket, 3 vectors each

@@ -88,31 +88,32 @@ class OpsSpecR12 extends AnyFunSuite {
 
   // ---- checkpoint statistics hygiene -------------------------------------
 
-  test("withFreshStats bounds checkpoint-generation statistics: an " +
-    "iterative snap loop keeps a constant-size estimate instead of " +
-    "squaring it every round (the q215 10x-scale driver hang)") {
+  test("Waist.cut generations size their leaf by stored bytes, not a " +
+    "compounding estimate") {
     import spark.implicits._
     import org.apache.spark.sql.GraftColumnBridge
-    def sz(df: org.apache.spark.sql.DataFrame): BigInt =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    import org.apache.spark.sql.execution.LogicalRDD
     var df = (0L until 50L).map(i => (i, i % 7)).toDF("a", "b")
-    var sizes = Vector.empty[BigInt]
-    for (_ <- 1 to 4) {
+    val gens = (1 to 4).map { g =>
       val joined = df.as("x")
         .join(df.select(col("a").as("a2"), col("b").as("b2")).as("y"),
           col("b") === col("b2"))
         .groupBy("a").agg(min("b2").as("b"))
-      df = GraftColumnBridge.withFreshStats(joined.localCheckpoint(true))
-      sizes = sizes :+ sz(df)
+      df = Waist.cut(joined)
+      // the leaf's estimate is this generation's materialized bytes: a
+      // Spark checkpoint would inherit the join's estimate, a product of
+      // the previous leaf's, and its digit count grows geometrically
+      // (the q215 10x-scale driver hang)
+      val stored = GraftColumnBridge.storedBytes(
+        Some(df.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd.id))
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(stored > 0 && size === BigInt(stored), s"generation $g")
+      assert(size < (1 << 20), s"generation $g estimate $size")
+      df
     }
-    // every generation reports the same bounded leaf estimate — without
-    // the reset, generation N's estimate multiplies generation N-1's
-    // (localCheckpoint inherits child-plan Statistics) and the BigInt
-    // digit count grows geometrically
-    assert(sizes.distinct.size === 1,
-      s"checkpoint stats drifted across generations: $sizes")
-    // and the data itself round-trips the re-wrap untouched
+    // and the data itself round-trips the cut untouched
     assert(df.count() === 50L)
+    gens.foreach(Waist.release)
   }
 
   // ---- preference-pair assembly invariants ------------------------------
