@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.IntegerType
 import graft.functions.{CharEntropy, CosineSimilarity, MinHashSignature, MinHashSketch, NgramSlots, NgramTop, RollingHash, SimHash64, SpaceSavingSketch, WordChunks, WordShingles}
 
 /** Session extensions: registers graft's native Catalyst expressions so they
-  * are callable from SQL and `call_function`.
+  * are callable from SQL and `call_function`, and installs the
+  * [[BindFilterValues]] post-planner rule.
   *
   * Install with `SparkSession.builder().withExtensions(new GraftExtensions)`
   * or `spark.sql.extensions=graft.GraftExtensions`.
@@ -26,6 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.ngramSlots)
     e.injectFunction(GraftExtensions.charEntropy)
     e.injectFunction(GraftExtensions.ngramTop)
+    e.injectQueryPostPlannerStrategyRule(_ => BindFilterValues)
   }
 }
 
@@ -163,7 +165,9 @@ object GraftExtensions {
     (exprs: Seq[Expression]) => ngramTopBuilder(exprs))
 
   /** Imperative registration for sessions built without the extension
-    * (idempotent) — keeps library call sites working under any session. */
+    * (idempotent) — keeps library call sites working under any session.
+    * Planner rules cannot be added to a running session, so such a
+    * session keeps filter literals in its generated code. */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("cosine_sim", exprs => {

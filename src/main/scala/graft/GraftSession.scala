@@ -71,6 +71,8 @@ object GraftSession {
       // classes; memory cost is a few KB per entry. Static conf — must be
       // set before the first session of the JVM; a memory-constrained
       // deployment lowers it through GRAFT_SPARK_EXTRA_CONF below.
+      // Filter values are bound as parameters (GraftExtensions'
+      // BindFilterValues), so a new value does not add an entry.
       .config("spark.sql.codegen.cache.maxEntries", 8192L)
       // Generated class names embed the codegen stage id by default; AQE
       // materializes broadcast stages from racing futures, so the same

@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted,
   SparkListenerStageSubmitted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import scala.jdk.CollectionConverters._
 
 /** Dev-only per-query profiler, the one runner behind the SCALING
@@ -23,7 +26,10 @@ import scala.jdk.CollectionConverters._
   *  - `exec.tasks`, `exec.task_cpu_s`, `exec.scan_mb`, `exec.shuffle_mb`:
   *    tasks, executor cpu, input bytes and shuffle-write bytes;
   *  - `ops.retained_mb`: block-manager storage the measured run leaves
-  *    behind, read before Profile's purge releases it.
+  *    behind, read before Profile's purge releases it;
+  *  - `plan.analysis_ms`, `plan.optimization_ms`, `plan.planning_ms`:
+  *    the `QueryExecution.tracker` phases of the query's DataFrame and of
+  *    every query execution the measured run completed.
   *
   * The measured run's stages, slowest first, go to stderr.
   *
@@ -78,6 +84,20 @@ object Profile {
     }
   }
 
+  /** Keeps the planning tracker of every query execution that ends.
+    * Callbacks run on the listener-bus thread. */
+  private final class PhaseListener extends QueryExecutionListener {
+    private val seen = new ConcurrentLinkedQueue[QueryPlanningTracker]()
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      seen.add(qe.tracker)
+    override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+      seen.add(qe.tracker)
+
+    /** Removes and returns every tracker seen so far. */
+    def take(): Seq[QueryPlanningTracker] =
+      Iterator.continually(seen.poll()).takeWhile(_ != null).toSeq
+  }
+
   private def tagged[T](spark: SparkSession, tag: String)(body: => T): T = {
     spark.sparkContext.setLocalProperty(Tag, tag)
     try body finally spark.sparkContext.setLocalProperty(Tag, null)
@@ -99,7 +119,7 @@ object Profile {
     * `<outJson>.progress`, and a later call skips every name already
     * there, so a multi-hour run at 10× data never restarts from zero. A
     * query that throws is logged, skipped and returned among the failed
-    * names. The listener is removed on return; the session stays open. */
+    * names. The listeners are removed on return; the session stays open. */
   def run(spark: SparkSession, sfDir: String, outJson: String,
       names: Seq[String]): Seq[String] = {
     val todo = if (names.isEmpty) SparkEntry.queries.keys.toSeq.sorted else names
@@ -115,10 +135,12 @@ object Profile {
     }
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val listener = new StageListener
+    val phases = new PhaseListener
     spark.sparkContext.addSparkListener(listener)
+    spark.listenerManager.register(phases)
     try todo.filterNot(done.contains).foreach { n =>
       try {
-        val body = measure(spark, listener, sfDir, n)
+        val body = measure(spark, listener, phases, sfDir, n)
         done(n) = body
         Files.writeString(progress, s"""{"q":"$n",$body}""" + "\n",
           StandardOpenOption.CREATE, StandardOpenOption.APPEND)
@@ -127,7 +149,10 @@ object Profile {
           System.err.println(s"[profile] $n FAILED: ${e.getMessage}")
           failed += n
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.listenerManager.unregister(phases)
+    }
     val json = todo.flatMap(n => done.get(n).map(b => s""""$n":{$b}"""))
       .mkString(s"""{"sf":"$sfDir","queries":{""", ",", "}}")
     Files.writeString(Paths.get(outJson), json + "\n")
@@ -138,8 +163,12 @@ object Profile {
   /** One warm-up and one measured run of `name`; returns the record's
     * JSON body (no braces) and prints the stage table. */
   private def measure(spark: SparkSession, listener: StageListener,
-      sfDir: String, name: String): String = {
-    def once(): Unit = Bench.materialize(SparkEntry.queries(name)(spark, sfDir))
+      phases: PhaseListener, sfDir: String, name: String): String = {
+    def once(): DataFrame = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      Bench.materialize(df)
+      df
+    }
     Bench.purgeStorage(spark)
     once()
     Bench.purgeStorage(spark)
@@ -149,8 +178,9 @@ object Profile {
     val gc0 = gcMs(); val jit0 = jit.getTotalCompilationTime
     val cg0 = compiles.getCount
     val c0 = Bench.cpuSeconds()
+    val start = System.currentTimeMillis()
     val t0 = System.nanoTime()
-    tagged(spark, name)(once())
+    val df = tagged(spark, name)(once())
     val wall = (System.nanoTime() - t0) / 1e9
     val cpu = Bench.cpuSeconds() - c0
     val gc = gcMs() - gc0
@@ -159,6 +189,11 @@ object Profile {
     val retained = org.apache.spark.sql.GraftColumnBridge.storedBytes()
     listener.drain(spark, s"$name/drain")
     val st = listener.take(name)
+    // the warm-up's trackers may arrive late; they started before `start`.
+    // A tracker has reference equality, so `distinct` drops a shared one.
+    val trackers = (df.queryExecution.tracker +: phases.take())
+      .filter(_.phases.values.forall(_.startTimeMs >= start)).distinct
+    def phaseMs(p: String): Long = trackers.flatMap(_.phases.get(p)).map(_.durationMs).sum
     def r3(v: Double): Double = (v * 1000).round / 1000.0
     val mb = 1048576.0
     val rec = Seq(
@@ -169,7 +204,10 @@ object Profile {
       "exec.task_cpu_s" -> r3(st.map(_.cpuNs).sum / 1e9),
       "exec.scan_mb" -> r3(st.map(_.inBytes).sum / mb),
       "exec.shuffle_mb" -> r3(st.map(_.swBytes).sum / mb),
-      "ops.retained_mb" -> r3(retained / mb))
+      "ops.retained_mb" -> r3(retained / mb),
+      "plan.analysis_ms" -> phaseMs(QueryPlanningTracker.ANALYSIS),
+      "plan.optimization_ms" -> phaseMs(QueryPlanningTracker.OPTIMIZATION),
+      "plan.planning_ms" -> phaseMs(QueryPlanningTracker.PLANNING))
     System.err.println(s"[profile] $name " +
       rec.map { case (k, v) => s"$k=$v" }.mkString(" "))
     System.err.println("  runS  cpuS tasks shufReadMB shufWriteMB  inputMB  stage")

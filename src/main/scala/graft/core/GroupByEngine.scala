@@ -1,7 +1,7 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's single analytical verb, Spark-first.
@@ -48,7 +48,31 @@ object GroupByEngine {
       combine: CombineMode = CombineMode.Merged): Option[DataFrame] = {
     val existing = pruneMissing(spark, filenames)
     if (existing.isEmpty) None
-    else Some(groupbyDf(SchemaDrift.readSharded(spark, existing), keys, aggs, where, aggregate, combine))
+    else {
+      val df = SchemaDrift.readSharded(spark, existing)
+      try Some(groupbyDf(df, keys, aggs, where, aggregate, combine))
+      catch { case e: AnalysisException => throw badCall(df, keys, aggs, where, e) }
+    }
+  }
+
+  /** An unknown column, or a filter value that does not compare with its
+    * column, is the caller's error: a typed [[BadCallException]] naming
+    * the part of the call at fault, which `callWithRetry` does not retry.
+    * Only translation over the read DataFrame is mapped; a failing read
+    * is the shards' fault and propagates as it is. */
+  private def badCall(df: DataFrame, keys: Seq[String], aggs: Seq[AggSpec],
+      where: Seq[FilterTerm], e: AnalysisException): BadCallException = {
+    def fails(body: => Any): Boolean =
+      try { body; false } catch { case _: AnalysisException => true }
+    val what = where.find(t => fails(df.filter(Translator.filterColumn(Seq(t)).get)))
+      .map(t => s"filter on column '${t.col}'")
+      .orElse(keys.find(k => fails(df.col(k))).map(k => s"group key '$k'"))
+      .orElse(aggs.find(a => fails(df.agg(Translator.aggColumn(a))))
+        .map(a => s"aggregate input '${a.input}'"))
+      .getOrElse("call")
+    val bad = new BadCallException(s"groupby: bad $what: ${e.getSimpleMessage}")
+    bad.initCause(e)
+    bad
   }
 
   /** Same semantics over an already-loaded DataFrame (e.g. a registered

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 /** Spec → Catalyst translation. Everything here produces plain `Column`
   * expressions, so Catalyst handles pushdown, pruning, and codegen — no
   * custom planner work is needed for reference parity (SURVEY.md §4).
+  * Filter values stay `lit(v)`; [[graft.BindFilterValues]] binds them
+  * as parameters in the generated code after optimization.
   */
 object Translator {
 

@@ -10,6 +10,7 @@ object SparkTestSession {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

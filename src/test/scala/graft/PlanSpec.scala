@@ -185,6 +185,91 @@ class PlanSpec extends AnyFunSuite {
       s"TPC-H Q6's filters must push down:\n$p")
   }
 
+  private val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** Every FilterExec of `df`'s executed plan, AQE stages included. */
+  private def filterExecs(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FilterExec] =
+    aqe.collect(df.queryExecution.executedPlan) {
+      case f: org.apache.spark.sql.execution.FilterExec => f
+    }
+
+  test("bound filter values keep pushdown and plan text: the scan pushes " +
+    "the value and the Filter line prints it as a literal") {
+    import graft.core._
+    val df = GraftService.groupby(spark, GraftService.GroupByCall(
+      Seq(s"$sf/lineitem.parquet"), Seq("l_returnflag"),
+      Seq(AggSpec("l_quantity", "sum", "q")),
+      Seq(FilterTerm("l_extendedprice", ">", 899.5),
+        FilterTerm("l_orderkey", "<", 1200L)))).get
+    val p = df.queryExecution.executedPlan.toString
+    val pushed = aqe.collect(df.queryExecution.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata("PushedFilters")
+    }.mkString
+    assert(pushed.contains("GreaterThan(l_extendedprice,899.5)") &&
+      pushed.contains("LessThan(l_orderkey,1200)"), s"the values must push down:\n$p")
+    assert(("Filter \\(\\(\\(isnotnull\\(l_extendedprice#\\d+\\) AND " +
+      "isnotnull\\(l_orderkey#\\d+L\\)\\) AND \\(l_extendedprice#\\d+ > 899\\.5\\)\\) " +
+      "AND \\(l_orderkey#\\d+L < 1200\\)\\)").r.findFirstIn(p).isDefined, p)
+    val Seq(f) = filterExecs(df)
+    assert(f.condition.collect { case b: BoundValue => b.lit.value } ===
+      Seq(899.5, 1200L), s"both values must be bound:\n$f")
+    val unbound = f.copy(condition = f.condition.transform { case b: BoundValue => b.lit })
+    assert(f.toString === unbound.toString)
+    assert(f.condition.sql === unbound.condition.sql)
+    assert(BindFilterValues(f) eq f, "the rule must be idempotent")
+  }
+
+  test("bound filter values: every primitive type binds and filters as " +
+    "its literal; In and strings stay literals") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val utc = java.time.ZoneOffset.UTC
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound").toString
+    spark.range(100).select(col("id"), (col("id") % 3).as("g"),
+      (col("id") % 2 === 0).as("b"), col("id").cast(ByteType).as("y"),
+      col("id").cast(ShortType).as("h"), col("id").cast(IntegerType).as("i"),
+      col("id").as("l"), col("id").cast(FloatType).as("f"),
+      col("id").cast(DoubleType).as("d"),
+      date_add(lit(java.time.LocalDate.of(2024, 1, 1)), col("id").cast(IntegerType)).as("dt"),
+      timestamp_seconds(col("id")).as("ts"),
+      timestamp_seconds(col("id")).cast(TimestampNTZType).as("ntz"),
+      col("id").cast(StringType).as("s"))
+      .write.parquet(s"$dir/t")
+    val t = spark.read.parquet(s"$dir/t")
+    def count(cond: org.apache.spark.sql.Column) =
+      t.filter(cond).groupBy("g").count()
+    def total(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(1)).sum
+    // id > 60 keeps 39 rows, id == 60 one; 2024-03-01 is day 60 of 2024
+    val cases = Seq[(org.apache.spark.sql.Column, DataType, Long)](
+      (col("b") > false, BooleanType, 50),
+      (col("y") > lit(60.toByte), ByteType, 39),
+      (col("h") > lit(60.toShort), ShortType, 39),
+      (col("i") === 60, IntegerType, 1),
+      (col("l") <= 60L, LongType, 61),
+      (col("f") > 60.5f, FloatType, 39),
+      (col("d") < 60.5, DoubleType, 61),
+      (col("dt") > lit(java.time.LocalDate.of(2024, 3, 1)), DateType, 39),
+      (col("ts") >= lit(java.time.Instant.ofEpochSecond(60)), TimestampType, 40),
+      (col("ntz") > lit(java.time.LocalDateTime.ofEpochSecond(60, 0, utc)),
+        TimestampNTZType, 39))
+    cases.foreach { case (cond, dt, want) =>
+      val df = count(cond)
+      assert(total(df) === want, s"$dt: $cond")
+      val bound = filterExecs(df).flatMap(_.condition.collect { case b: BoundValue => b })
+      assert(bound.map(_.dataType) === Seq(dt), s"$dt must bind: $bound")
+    }
+    for (cond <- Seq(col("i").isin(1, 2, 3), col("s") > "50")) {
+      val df = count(cond)
+      total(df)
+      val filters = filterExecs(df)
+      assert(filters.nonEmpty &&
+        filters.forall(_.condition.collect { case b: BoundValue => b }.isEmpty),
+        s"$cond must stay literal")
+    }
+  }
+
   test("row-wise sketches run with zero aggregation shuffle (q84, q85)") {
     for (q <- Seq("q84_minhash_rowwise", "q85_simhash_rowwise")) {
       val p = plan(q)

@@ -286,6 +286,76 @@ class ServiceSpec extends AnyFunSuite {
     assert(e.getMessage.contains("3 attempts") && tries.get() === 3)
   }
 
+  test("one generated class serves every filter value: calls that differ " +
+    "only in comparison values compile nothing and return their own rows") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val files = Seq(s"$sf/lineitem.parquet")
+    val keys = Seq("l_returnflag", "l_linestatus")
+    val aggs = Seq(AggSpec("l_quantity", "sum", "sum_qty"),
+      AggSpec("l_extendedprice", "max", "max_price"),
+      AggSpec("l_orderkey", "count", "n"))
+    def call(price: Double, order: Long) =
+      GraftService.groupby(spark, GraftService.GroupByCall(files, keys, aggs,
+        Seq(FilterTerm("l_extendedprice", ">", price),
+          FilterTerm("l_orderkey", "<", order)))).get
+        .orderBy(keys.map(col): _*).collect().toSeq
+    def plain(price: Double, order: Long) =
+      spark.read.parquet(files: _*)
+        .filter(col("l_extendedprice") > price && col("l_orderkey") < order)
+        .groupBy(keys.map(col): _*)
+        .agg(sum("l_quantity"), max("l_extendedprice"), count("l_orderkey"))
+        .orderBy(keys.map(col): _*).collect().toSeq
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    call(20000.5, 1200L) // warm: the shape compiles here, once
+    val c0 = compiles()
+    val second = call(35000.25, 900L)
+    val c1 = compiles()
+    val third = call(50000.75, 600L)
+    val c2 = compiles()
+    assert(c1 - c0 === 0L, "the second value compiled new code")
+    assert(c2 - c1 === 0L, "the third value compiled new code")
+    assert(second === plain(35000.25, 900L))
+    assert(third === plain(50000.75, 600L))
+    assert(second.nonEmpty && third.nonEmpty && second != third)
+  }
+
+  test("a bad column or value at the service boundary is a BadCallException, " +
+    "raised on the first attempt inside callWithRetry") {
+    def call(keys: Seq[String], aggs: Seq[AggSpec], where: Seq[FilterTerm]) =
+      GraftService.groupby(spark, GraftService.GroupByCall(
+        Seq(s"$sf/lineitem.parquet"), keys, aggs, where))
+    val qty = Seq(AggSpec("l_quantity", "sum", "q"))
+    val cases = Seq[(String, () => Any)](
+      "no_such_key" -> (() => call(Seq("no_such_key"), qty, Nil)),
+      "no_such_input" -> (() => call(Seq("l_returnflag"),
+        Seq(AggSpec("no_such_input", "sum", "s")), Nil)),
+      "no_such_filter_col" -> (() => call(Seq("l_returnflag"), qty,
+        Seq(FilterTerm("no_such_filter_col", ">", 1.0)))),
+      "l_shipdate" -> (() => call(Seq("l_returnflag"), qty,
+        Seq(FilterTerm("l_shipdate", ">", true)))))
+    cases.foreach { case (column, run) =>
+      val e = intercept[BadCallException](run())
+      assert(e.getMessage.contains(s"'$column'"), e.getMessage)
+    }
+    // not transient: callWithRetry surfaces it on the first attempt
+    val tries = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[BadCallException] {
+      GraftService.callWithRetry(spark, "bad filter column") {
+        tries.incrementAndGet()
+        call(Seq("l_returnflag"), qty, Seq(FilterTerm("no_such_filter_col", "<", 3L)))
+      }
+    }
+    assert(tries.get() === 1)
+    // a read failure is not a bad call: the files, not the spec, are at fault
+    val dir = Files.createTempDirectory("graft-badread")
+    val junk = dir.resolve("junk.parquet")
+    Files.writeString(junk, "not parquet")
+    val readErr = intercept[Throwable](GraftService.groupby(spark,
+      GraftService.GroupByCall(Seq(junk.toString), Seq("a"), qty)))
+    assert(!readErr.isInstanceOf[BadCallException], readErr)
+  }
+
   test("oversized results raise the typed ResultTooBigException") {
     // pre-flight cap: a whole-table collect against a tiny cap fails before
     // any task runs (the reference's FileTooBigError pre-check semantics)
