@@ -11,6 +11,12 @@ sealed abstract class GraftException(msg: String) extends RuntimeException(msg)
 final class UnknownVerbException(verb: String)
   extends GraftException(s"Sorry, I don't understand you: '$verb'") // controller.py:495 wording
 final class BadCallException(msg: String) extends GraftException(msg)
+/** A shard the call names cannot be read as part of one table: a file
+  * that is not Parquet, or a field whose types across shards do not widen
+  * ([[SchemaDrift]]). The data, not the call, is at fault, and another
+  * attempt reads the same bytes. */
+final class ShardFaultException(msg: String, cause: Throwable = null)
+  extends GraftException(msg) { if (cause != null) initCause(cause) }
 final class CallTimeoutException(msg: String, cause: Throwable)
   extends GraftException(msg) { initCause(cause) } // rpc.py:136-149 RPCError('Timeout')
 /** The reference's `FileTooBigError` re-aimed at the failure a DRIVER
@@ -172,7 +178,11 @@ object GraftService {
       case "ping"     => OpsApi.ping(spark)
       case "info"     => OpsApi.info(spark).toString
       case "loglevel" => OpsApi.logLevel(spark, args.getOrElse("level", "info")); "ok"
-      case "sleep"    => Thread.sleep((args.getOrElse("seconds", "0").toDouble * 1000).toLong); "done"
+      case "sleep"    =>
+        val s = args.getOrElse("seconds", "0")
+        val seconds = s.toDoubleOption.filter(d => d >= 0 && !d.isInfinite).getOrElse(
+          throw new BadCallException(s"sleep: 'seconds' must be a non-negative number, got '$s'"))
+        Thread.sleep((seconds * 1000).toLong); "done"
       case "kill" | "killall" => OpsApi.shutdown(spark); "stopped"
       case "killworkers" => // ref: stop workers, controller survives
         spark.sparkContext.cancelAllJobs(); "workers stopped"

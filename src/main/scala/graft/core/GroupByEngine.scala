@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Here the whole scatter/gather topology collapses into one declarative plan:
-  * `spark.read.parquet(shards).where(filter).groupBy(keys).agg(aggs)`.
+  * `spark.read.schema(widened).parquet(shards).where(filter).groupBy(keys).agg(aggs)`,
+  * where `widened` is the shards' footer schemas folded by [[SchemaDrift]].
   * Spark's FileSourceScanExec is the scatter (one task per split, with
   * locality), partial HashAggregateExec is the per-shard kernel, the shuffle
   * is the gather, and final HashAggregateExec is the merge the reference
@@ -28,7 +29,10 @@ import org.apache.spark.sql.functions._
   *    (partition, group), not raw data;
   *  - missing-file tolerance uses one batched listing per parent directory,
   *    not a per-file RPC, so pruning 100k shards costs O(dirs) namenode/S3
-  *    LIST calls, not O(files).
+  *    LIST calls, not O(files); the listed statuses go on to the footer
+  *    read that resolves the shards' schema on the driver, so resolving it
+  *    starts no Spark job (Spark's file index still lists more than 32
+  *    shard paths with a listing job of its own).
   */
 object GroupByEngine {
 
@@ -36,8 +40,9 @@ object GroupByEngine {
     * the reference's empty-result protocol (parqueryd/controller.py:617-622,
     * RELEASE_NOTES.rst:64-65, rpc.py:151-153). Shard schemas may drift
     * (schema-on-read, parqueryd/worker.py:381-397): added columns read as
-    * null where absent, and int-width drift widens — see
-    * [[SchemaDrift.readSharded]]. */
+    * null where absent, and int-width drift widens; the schema comes from
+    * the shards' footers, read on the driver from the listing that pruned
+    * them — see [[SchemaDrift.readSharded]]. */
   def groupby(
       spark: SparkSession,
       filenames: Seq[String],
@@ -49,7 +54,7 @@ object GroupByEngine {
     val existing = pruneMissing(spark, filenames)
     if (existing.isEmpty) None
     else {
-      val df = SchemaDrift.readSharded(spark, existing)
+      val df = SchemaDrift.readListed(spark, existing)
       try Some(groupbyDf(df, keys, aggs, where, aggregate, combine))
       catch { case e: AnalysisException => throw badCall(df, keys, aggs, where, e) }
     }
@@ -131,18 +136,14 @@ object GroupByEngine {
     * directory instead of one exists() RPC per file. At reference scale the
     * "catalog" is just the file list (files_map, parqueryd/controller.py:107);
     * at 100 TB the listing is the only driver-side O(files) step, so keep it
-    * to bulk LIST calls. */
-  private[graft] def pruneMissing(spark: SparkSession, filenames: Seq[String]): Seq[String] = {
-    if (filenames.isEmpty) return Nil
+    * to bulk LIST calls. Returns the listed status of each present shard,
+    * in caller order, for the footer read to use. */
+  private[graft] def pruneMissing(spark: SparkSession, filenames: Seq[String]): Seq[FileStatus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val byDir = filenames.distinct.groupBy(f => new Path(f).getParent)
-    val present = byDir.iterator.flatMap { case (dir, files) =>
-      val fs = dir.getFileSystem(conf)
-      val listed: Set[String] =
-        try fs.listStatus(dir).iterator.map(_.getPath.getName).toSet
-        catch { case _: java.io.FileNotFoundException => Set.empty[String] }
-      files.filter(f => listed.contains(new Path(f).getName))
-    }.toSet
-    filenames.filter(present.contains) // preserve caller order
+    def list(dir: Path): Map[String, FileStatus] =
+      try dir.getFileSystem(conf).listStatus(dir).map(s => s.getPath.getName -> s).toMap
+      catch { case _: java.io.FileNotFoundException => Map.empty }
+    val listed = filenames.map(new Path(_).getParent).distinct.map(d => d -> list(d)).toMap
+    filenames.map(new Path(_)).flatMap(p => listed(p.getParent).get(p.getName)) // caller order
   }
 }

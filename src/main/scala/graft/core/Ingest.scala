@@ -209,11 +209,8 @@ object Ingest {
     * scan inside the grace window). Returns the deleted dirs. */
   def vacuum(spark: SparkSession, tableDir: String,
       graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tableDir).getFileSystem(conf)
-    val in = fs.open(new Path(tableDir, ManifestName))
-    val current = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    val currentPath = fs.makeQualified(new Path(current))
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val currentPath = fs.makeQualified(new Path(publishedDir(spark, tableDir)))
     val dataRoot = new Path(tableDir, "data")
     if (!fs.exists(dataRoot)) return Nil
     val cutoff = System.currentTimeMillis() - graceMs
@@ -224,11 +221,15 @@ object Ingest {
       .map { s => fs.delete(s.getPath, true); s.getPath.toString }
   }
 
-  /** Read the currently-published version (resolve manifest, then scan). */
-  def readPublished(spark: SparkSession, tableDir: String): DataFrame = {
+  /** Read the currently-published version: resolve the manifest, then
+    * scan its files as one shard set ([[SchemaDrift.readSharded]]). */
+  def readPublished(spark: SparkSession, tableDir: String): DataFrame =
+    SchemaDrift.readSharded(spark, Seq(publishedDir(spark, tableDir)))
+
+  /** The version dir the manifest of `tableDir` points at. */
+  private def publishedDir(spark: SparkSession, tableDir: String): String = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(new Path(tableDir, ManifestName))
-    val dataDir = try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
-    spark.read.parquet(dataDir)
+    try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
   }
 }

@@ -114,9 +114,12 @@ object OpsApi {
       pools = pools)
   }
 
-  /** Broadcast log level (reference `loglevel` verb: controller.py:498-510). */
+  /** Broadcast log level (reference `loglevel` verb: controller.py:498-510).
+    * A level `SparkContext.setLogLevel` rejects is a [[BadCallException]]. */
   def logLevel(spark: SparkSession, level: String): Unit =
-    spark.sparkContext.setLogLevel(level.toUpperCase)
+    try spark.sparkContext.setLogLevel(level.toUpperCase)
+    catch { case e: IllegalArgumentException =>
+      throw new BadCallException(s"loglevel: unknown 'level' '$level'").initCause(e) }
 
   /** Cancel a running query group (reference `delete_download`/kill verbs). */
   def cancelJobGroup(spark: SparkSession, group: String): Unit =

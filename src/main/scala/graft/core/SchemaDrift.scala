@@ -1,80 +1,89 @@
 package graft.core
 
-import org.apache.spark.SparkException
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types._
+import shaded.parquet.org.apache.thrift.TException
 
 /** Schema-on-read over independently written shard files — the reference's
   * contract (parqueryd/worker.py:381-397, README.md:25-28): shard sets
   * drift over time (a column added by a new producer, an int widened to
   * long) and a query over the union must still answer.
   *
-  * Strategy, in cost order:
-  *  1. `mergeSchema=true` read — Spark merges footers DISTRIBUTED (one task
-  *     wave), handles added/missing columns. This is the common case and
-  *     costs only the footer pass.
-  *  2. If merge throws `CANNOT_MERGE_SCHEMAS` (type drift: int32 vs int64),
-  *     sweep per-path footer schemas on a bounded driver pool, widen them
-  *     through the numeric lattice below, and re-read with one EXPLICIT
-  *     widened schema — Spark 4's Parquet reader upcasts per file
-  *     (int→long, int/long/float→double) and fills absent columns with
-  *     null, so the result is STILL a single FileSourceScan: no per-shard
-  *     DataFrame unions, no N-way plan blowup at 100k shards.
+  * One path: the driver reads every shard's Parquet footer (schema only,
+  * no row groups, no Spark job), takes the Spark schema the writer stored
+  * there or else converts the Parquet one, folds the schemas through the
+  * widening lattice below, and scans once under that EXPLICIT schema —
+  * Spark 4's Parquet reader upcasts per file (int→long, int/long/float→
+  * double, date→timestamp_ntz) and fills absent columns with null, so the
+  * result is a single FileSourceScan: no per-shard DataFrame unions, no
+  * N-way plan blowup at 100k shards. Footers are read on a few threads
+  * (Spark's own fan-out, as its footer reader uses); a hung read is
+  * bounded by the caller's `callWithRetry` timeout.
   *
   * Widening lattice (both engines' SQL semantics agree with it):
   * byte < short < int < long; float < double; any integral ⊔ any
   * fractional = double (never float — int32 doesn't fit float exactly).
   * Decimals widen to max integral digits + max scale. Equal types pass
   * through; anything else (string vs int) is real corruption and raises a
-  * typed error naming the field.
+  * typed error naming the field. A file that is not Parquet, or whose
+  * footer does not decode, raises the same typed [[ShardFaultException]]
+  * naming the file; an `IOException` from storage propagates as it is
+  * (transient, worth a retry).
   */
 object SchemaDrift {
 
-  final class SchemaDriftException(msg: String) extends IllegalArgumentException(msg)
+  /** The name callers catch a schema conflict by. */
+  type SchemaDriftException = ShardFaultException
 
-  /** Read a drifting shard set as one DataFrame (single scan either path). */
+  /** Read a drifting shard set (files or directories) as one DataFrame. */
   def readSharded(spark: SparkSession, paths: Seq[String]): DataFrame = {
     require(paths.nonEmpty, "readSharded needs at least one path")
-    try spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    catch {
-      case e: SparkException if e.getMessage.contains("CANNOT_MERGE_SCHEMAS") =>
-        spark.read.schema(widenedSchema(spark, paths)).parquet(paths: _*)
-    }
+    val conf = spark.sparkContext.hadoopConfiguration
+    readListed(spark, paths.map(new Path(_)).map(p => p.getFileSystem(conf).getFileStatus(p)))
   }
 
-  /** Per-path footer schemas, swept on a bounded pool (footer-only reads;
-    * this is the rare fallback path, and still O(paths) driver work — the
-    * happy path merges footers in executors). */
-  private def widenedSchema(spark: SparkSession, paths: Seq[String]): StructType = {
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration._
-    // daemon pool + finite deadline: this fallback fires exactly when
-    // storage is degraded, so one hung footer read must surface as an
-    // error (and never pin the JVM via non-daemon threads), not wedge the
-    // driver forever
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, paths.size),
-      (r: Runnable) => { val t = new Thread(r, "graft-drift-footer"); t.setDaemon(true); t })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    // deadline SCALES with the sweep size (≥1 s per path, 10 min floor) and
-    // is conf-overridable: a flat cap would reject an honest 100k-shard
-    // sweep — the exact scenario this fallback exists for — while a hung
-    // footer read must still surface as an error, not wedge the driver
-    val deadline = spark.conf.getOption("graft.drift.footerSweepTimeoutSec")
-      .map(_.toLong).getOrElse(math.max(600L, paths.size.toLong)).seconds
-    try {
-      val schemas = Await.result(
-        Future.sequence(paths.map(p => Future(spark.read.parquet(p).schema))),
-        deadline)
-      schemas.reduce(widen)
-    } catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new SchemaDriftException(
-          s"schema-drift footer sweep over ${paths.size} paths exceeded $deadline " +
-            "(degraded storage?) — retry, raise graft.drift.footerSweepTimeoutSec, " +
-            "or pass an explicit schema")
-    } finally pool.shutdown()
+  /** [[readSharded]] over shards already listed (e.g. by
+    * `GroupByEngine.pruneMissing`), in the caller's order: the footer
+    * schemas of their data files, widened in order, drive one scan. */
+  private[graft] def readListed(spark: SparkSession, shards: Seq[FileStatus]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+    // one file's schema from its footer alone: the Spark schema its writer
+    // stored, else the converted Parquet schema
+    def schemaOf(f: FileStatus): StructType =
+      try ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, ParquetFooterReader
+        .readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)), converter)
+      catch {
+        // parquet-mr raises a footer that does not decode as an
+        // IOException over a thrift error: a fault of the file, not storage
+        case e: java.io.IOException if !e.getCause.isInstanceOf[TException] => throw e
+        case NonFatal(e) => throw new ShardFaultException(
+          s"shard ${f.getPath} is not a readable Parquet file: ${e.getMessage}", e)
+      }
+    val files = shards.flatMap(s => dataFiles(s.getPath.getFileSystem(conf), s)).distinct
+    // 8 threads, as Spark's own footer reader uses; parmap wraps a failure
+    // in SparkException, so each result comes back as a Try and the first
+    // failure is rethrown here with its own type
+    val schemas = GraftColumnBridge.parmap(files, "graft-footer", 8)(f =>
+      scala.util.Try(schemaOf(f))).map(_.get)
+    val widened = schemas.reduceOption(widen).getOrElse(throw new ShardFaultException(
+      s"no Parquet data file under ${shards.map(_.getPath).mkString(", ")}"))
+    spark.read.schema(widened).parquet(shards.map(_.getPath.toString): _*)
   }
+
+  /** A file is itself; a directory contributes its leaf files, by name,
+    * skipping names that start with `_` or `.` (`_SUCCESS`, `.crc`). */
+  private def dataFiles(fs: FileSystem, s: FileStatus): Seq[FileStatus] =
+    if (!s.isDirectory) Seq(s)
+    else fs.listStatus(s.getPath).toSeq.sortBy(_.getPath.getName)
+      .filterNot(c => Seq("_", ".").exists(c.getPath.getName.startsWith))
+      .flatMap(dataFiles(fs, _))
 
   /** Union of fields (first-seen order), types widened; all nullable —
     * a field absent from any shard is null there by contract. */
@@ -114,7 +123,7 @@ object SchemaDrift {
       ArrayType(widenType(field, x.elementType, y.elementType), containsNull = true)
     case (x: StructType, y: StructType) => widen(x, y)
     case _ =>
-      throw new SchemaDriftException(
+      throw new ShardFaultException(
         s"shard schema conflict on field '$field': ${a.sql} vs ${b.sql} is not a widening")
   }
 

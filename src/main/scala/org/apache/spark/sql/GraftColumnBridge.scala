@@ -14,7 +14,8 @@ import org.apache.spark.storage.RDDBlockId
   * trap. The well-trodden pattern for Spark expression libraries (one
   * object in the `org.apache.spark.sql` package, nothing else); only
   * public Spark jars are touched. [[graft.ops.Waist]] uses the same door
-  * for Spark-internal storage, statistics and checkpoint state. */
+  * for Spark-internal storage, statistics and checkpoint state, and
+  * [[graft.core.SchemaDrift]] for Spark's bounded fan-out. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -38,6 +39,12 @@ object GraftColumnBridge {
     classic.Dataset.ofRows(cs,
       lr.copy()(cs, Some(Statistics(BigInt(bytes))), Some(lr.constraints)))
   }
+
+  /** `f` over `in` on at most `maxThreads` daemon threads of a pool that
+    * lives for this call (Spark's `ThreadUtils.parmap`, which its own
+    * Parquet footer reader uses); results in input order. */
+  def parmap[I, O](in: Seq[I], prefix: String, maxThreads: Int)(f: I => O): Seq[O] =
+    org.apache.spark.util.ThreadUtils.parmap(in, prefix, maxThreads)(f)
 
   /** Sets the context's checkpoint directory to exactly `dir`, also to
     * none, which `SparkContext` offers no public way to do. */

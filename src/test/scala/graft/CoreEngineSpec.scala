@@ -157,7 +157,7 @@ class CoreEngineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-drift2").toString
     Seq((1, "a")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/s1")
     Seq((2, "b", 9L)).toDF("k", "v", "n").coalesce(1).write.parquet(s"$dir/s2")
-    // same int width + added column → plain mergeSchema path succeeds
+    // same int width + added column → the footer schemas union, one scan
     val df = SchemaDrift.readSharded(spark, Seq(s"$dir/s1", s"$dir/s2"))
     assert(df.count() === 2 && df.schema.fieldNames.contains("n"))
     // string vs int on the same field is corruption, not widening

@@ -354,6 +354,86 @@ class ServiceSpec extends AnyFunSuite {
     val readErr = intercept[Throwable](GraftService.groupby(spark,
       GraftService.GroupByCall(Seq(junk.toString), Seq("a"), qty)))
     assert(!readErr.isInstanceOf[BadCallException], readErr)
+    // ...but it is typed, names the file, keeps the cause, and is not retried
+    assert(readErr.isInstanceOf[ShardFaultException], readErr)
+    assert(readErr.getMessage.contains("junk.parquet") && readErr.getCause != null,
+      readErr.getMessage)
+    val junkTries = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[ShardFaultException] {
+      GraftService.callWithRetry(spark, "junk shard") {
+        junkTries.incrementAndGet()
+        GraftService.groupby(spark,
+          GraftService.GroupByCall(Seq(junk.toString), Seq("a"), qty))
+      }
+    }
+    assert(junkTries.get() === 1)
+  }
+
+  test("shards whose field types do not widen raise a typed ShardFaultException " +
+    "naming the field, raised on the first attempt inside callWithRetry") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-conflict").toString
+    Seq((1, "a")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/s1")
+    Seq(("oops", "b")).toDF("k", "v").coalesce(1).write.parquet(s"$dir/s2")
+    val shards = Seq(s"$dir/s1", s"$dir/s2")
+    val tries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[ShardFaultException] {
+      GraftService.callWithRetry(spark, "conflicting shards") {
+        tries.incrementAndGet()
+        GraftService.groupby(spark, GraftService.GroupByCall(shards, Seq("v"),
+          Seq(AggSpec("k", "count", "n"))))
+      }
+    }
+    assert(tries.get() === 1)
+    assert(!e.isInstanceOf[BadCallException])
+    assert(e.getMessage.contains("'k'"), e.getMessage)
+  }
+
+  test("a shard whose footer does not decode raises a typed ShardFaultException " +
+    "naming the file, raised on the first attempt inside callWithRetry") {
+    // a copy of a fixture file with valid magic bytes and footer length,
+    // its footer bytes overwritten with 0xFF: the thrift decode of the file
+    // metadata fails (an IOException over a TProtocolException)
+    val dir = Files.createTempDirectory("graft-badfooter")
+    val bad = dir.resolve("badfooter.parquet")
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(s"$sf/lineitem.parquet"))
+    val footerLen = java.nio.ByteBuffer.wrap(bytes, bytes.length - 8, 4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+    java.util.Arrays.fill(bytes, bytes.length - 8 - footerLen, bytes.length - 8, 0xFF.toByte)
+    Files.write(bad, bytes)
+    val tries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val e = intercept[ShardFaultException] {
+      GraftService.callWithRetry(spark, "corrupt footer") {
+        tries.incrementAndGet()
+        GraftService.groupby(spark, GraftService.GroupByCall(Seq(bad.toString),
+          Seq("l_returnflag"), Seq(AggSpec("l_quantity", "sum", "q"))))
+      }
+    }
+    assert(tries.get() === 1)
+    assert(e.getMessage.contains("badfooter.parquet") && e.getCause != null, e.getMessage)
+  }
+
+  test("sleep with a non-numeric 'seconds' is a BadCallException naming it") {
+    val e = intercept[BadCallException] {
+      GraftService.call(spark, "sleep", Map("seconds" -> "soon"))
+    }
+    assert(e.getMessage.contains("'seconds'") && e.getMessage.contains("soon"), e.getMessage)
+    assert(GraftService.call(spark, "sleep", Map("seconds" -> "0.001")) === "done")
+  }
+
+  test("sleep with a negative 'seconds' is a BadCallException naming it") {
+    val e = intercept[BadCallException] {
+      GraftService.call(spark, "sleep", Map("seconds" -> "-1"))
+    }
+    assert(e.getMessage.contains("'seconds'") && e.getMessage.contains("-1"), e.getMessage)
+  }
+
+  test("loglevel with an unknown level is a BadCallException naming it") {
+    val e = intercept[BadCallException] {
+      GraftService.call(spark, "loglevel", Map("level" -> "chatty"))
+    }
+    assert(e.getMessage.contains("'level'") && e.getMessage.contains("chatty"), e.getMessage)
+    assert(GraftService.call(spark, "loglevel", Map("level" -> "warn")) === "ok")
   }
 
   test("oversized results raise the typed ResultTooBigException") {
