@@ -1,16 +1,6 @@
 package graft.core
 
-import java.io.ByteArrayOutputStream
-import java.nio.channels.Channels
-import scala.jdk.CollectionConverters._
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.arrow.vector.types.{DateUnit, FloatingPointPrecision, TimeUnit => ArrowTimeUnit}
-import org.apache.arrow.vector.types.pojo.{ArrowType, Field, FieldType, Schema => ArrowSchema}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 
 /** Arrow-IPC result wire: the reference's interchange contract is a
   * serialized Arrow table shipped back to the caller (parqueryd/worker.py:28
@@ -22,238 +12,25 @@ import org.apache.spark.sql.types._
   * gate. Bulk data movement stays on the parquet/manifest path ([[Ingest]]);
   * this is only the last-hop result contract.
   *
-  * Wire types: all scalar Spark types plus NESTED `array` / `struct` /
-  * `map` (recursively) — profile reports and sketch outputs like
-  * SpaceSaving's `array<struct<term,cnt,err>>` ship without a flattening
-  * projection. Maps ride Arrow's canonical map layout (a list of
-  * non-null `entries{key, value}` structs, keys non-null per the Arrow
-  * spec and Spark's own map invariant); entries are written sorted by
-  * the key's string rendering so identical Maps serialize to identical
-  * wire bytes regardless of Scala Map iteration order. Map KEYS must be
-  * scalar (matching what Spark can group/compare); values recurse fully.
+  * Both directions are Spark's own Arrow codec, the one PySpark and Spark
+  * Connect ship results with, so the wire carries every type that codec
+  * does: all scalar types (decimal, tinyint/smallint, intervals and variant
+  * included) and nested `array` / `struct` / `map` at any depth, map keys
+  * of any type. Timestamps ride as `Timestamp(MICROSECOND, "UTC")`,
+  * timestamp_ntz without a zone; field nullability follows the result
+  * schema; map entries keep the result's order.
   */
 object ArrowResult {
-
-  private def arrowField(name: String, dt: DataType): Field = dt match {
-    case ArrayType(et, _) =>
-      new Field(name, FieldType.nullable(ArrowType.List.INSTANCE),
-        Seq(arrowField("item", et)).asJava)
-    case StructType(fs) =>
-      new Field(name, FieldType.nullable(ArrowType.Struct.INSTANCE),
-        fs.map(f => arrowField(f.name, f.dataType)).toSeq.asJava)
-    case MapType(kt, vt, _) =>
-      val keyField = kt match {
-        case _: ArrayType | _: StructType | _: MapType =>
-          throw new BadCallException(
-            s"arrow result: map keys must be scalar, got ${kt.simpleString}")
-        case _ =>
-          new Field(MapVector.KEY_NAME, FieldType.notNullable(arrowType(kt)), null)
-      }
-      val entries = new Field(MapVector.DATA_VECTOR_NAME,
-        FieldType.notNullable(ArrowType.Struct.INSTANCE),
-        Seq(keyField, arrowField(MapVector.VALUE_NAME, vt)).asJava)
-      new Field(name, FieldType.nullable(new ArrowType.Map(false)),
-        Seq(entries).asJava)
-    case _ =>
-      new Field(name, FieldType.nullable(arrowType(dt)), null)
-  }
-
-  private def arrowType(dt: DataType): ArrowType = dt match {
-    case BooleanType      => ArrowType.Bool.INSTANCE
-    case IntegerType      => new ArrowType.Int(32, true)
-    case LongType         => new ArrowType.Int(64, true)
-    case FloatType        => new ArrowType.FloatingPoint(FloatingPointPrecision.SINGLE)
-    case DoubleType       => new ArrowType.FloatingPoint(FloatingPointPrecision.DOUBLE)
-    case StringType       => ArrowType.Utf8.INSTANCE
-    case BinaryType       => ArrowType.Binary.INSTANCE
-    case DateType         => new ArrowType.Date(DateUnit.DAY)
-    case TimestampType    => new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, "UTC")
-    case TimestampNTZType => new ArrowType.Timestamp(ArrowTimeUnit.MICROSECOND, null)
-    case other => throw new BadCallException(
-      s"arrow result: unsupported column type ${other.simpleString} " +
-        "(project/cast the result to wire types first)")
-  }
-
-  private def setNullAt(vec: ValueVector, r: Int): Unit = vec match {
-    case v: BaseFixedWidthVector    => v.setNull(r)
-    case v: BaseVariableWidthVector => v.setNull(r)
-    case v: ListVector              => v.setNull(r)
-    case v: StructVector            => v.setNull(r)
-    case other => throw new IllegalStateException(s"setNull on ${other.getClass}")
-  }
-
-  /** Write one (non-null) value at row `r`; recurses into list/struct.
-    * List children keep their own running element index, carried through
-    * `ListVector.startNewValue`'s returned offset — correct because rows
-    * are written strictly in order. */
-  private def writeValue(vec: ValueVector, r: Int, dt: DataType, value: Any): Unit =
-    (dt, vec) match {
-      case (BooleanType, v: BitVector) =>
-        v.setSafe(r, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (IntegerType, v: IntVector)   => v.setSafe(r, value.asInstanceOf[Int])
-      case (LongType, v: BigIntVector)   => v.setSafe(r, value.asInstanceOf[Long])
-      case (FloatType, v: Float4Vector)  => v.setSafe(r, value.asInstanceOf[Float])
-      case (DoubleType, v: Float8Vector) => v.setSafe(r, value.asInstanceOf[Double])
-      case (StringType, v: VarCharVector) =>
-        v.setSafe(r, value.asInstanceOf[String].getBytes("UTF-8"))
-      case (BinaryType, v: VarBinaryVector) =>
-        v.setSafe(r, value.asInstanceOf[Array[Byte]])
-      case (DateType, v: DateDayVector) =>
-        v.setSafe(r, value.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-      case (TimestampType, v: TimeStampMicroTZVector) =>
-        // floorDiv, not /: truncation flips the sub-second part of
-        // pre-1970 instants by a full second
-        val ts = value.asInstanceOf[java.sql.Timestamp]
-        v.setSafe(r, Math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000)
-      case (TimestampNTZType, v: TimeStampMicroVector) =>
-        val ldt = value.asInstanceOf[java.time.LocalDateTime]
-        val ep = ldt.toEpochSecond(java.time.ZoneOffset.UTC)
-        v.setSafe(r, ep * 1000000L + ldt.getNano / 1000)
-      case (ArrayType(et, _), v: ListVector) =>
-        val seq = value.asInstanceOf[scala.collection.Seq[Any]]
-        val start = v.startNewValue(r)
-        seq.zipWithIndex.foreach { case (x, i) =>
-          if (x == null) setNullAt(v.getDataVector, start + i)
-          else writeValue(v.getDataVector, start + i, et, x)
-        }
-        v.endValue(r, seq.length)
-      case (StructType(fs), v: StructVector) =>
-        v.setIndexDefined(r)
-        val row = value.asInstanceOf[Row]
-        fs.zipWithIndex.foreach { case (f, i) =>
-          val child = v.getChildByOrdinal(i)
-          if (row.isNullAt(i)) setNullAt(child, r)
-          else writeValue(child, r, f.dataType, row.get(i))
-        }
-      case (MapType(kt, vt, _), v: MapVector) =>
-        val m = value.asInstanceOf[scala.collection.Map[Any, Any]]
-        val start = v.startNewValue(r)
-        val entries = v.getDataVector.asInstanceOf[StructVector]
-        // sorted by key rendering: Scala Map iteration order is
-        // implementation-defined, the wire bytes should not be
-        m.toSeq.sortBy(_._1.toString).zipWithIndex.foreach { case ((k, mv), i) =>
-          val idx = start + i
-          entries.setIndexDefined(idx)
-          writeValue(entries.getChildByOrdinal(0), idx, kt, k)
-          val valVec = entries.getChildByOrdinal(1)
-          if (mv == null) setNullAt(valVec, idx)
-          else writeValue(valVec, idx, vt, mv)
-        }
-        v.endValue(r, m.size)
-      case (dt2, v) => throw new IllegalStateException(s"$dt2 vs ${v.getClass}")
-    }
 
   /** Serialize a (small, final) result as one Arrow IPC stream.
     * `maxResultBytes > 0` applies the typed memory-cap taxonomy
     * ([[GraftService.collectResult]]): oversized results raise
     * [[ResultTooBigException]] instead of flooding the driver. */
-  def toArrowBytes(df: DataFrame, maxResultBytes: Long = 0L): Array[Byte] = {
-    val sparkSchema = df.schema
-    val rows = GraftService.collectResult(df, maxResultBytes)
-    val fields = sparkSchema.fields.map(f => arrowField(f.name, f.dataType))
-    val schema = new ArrowSchema(fields.toSeq.asJava)
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(schema, allocator)
-    try {
-      root.allocateNew()
-      sparkSchema.fields.zipWithIndex.foreach { case (f, c) =>
-        val vec = root.getVector(c)
-        rows.zipWithIndex.foreach { case (row, r) =>
-          if (row.isNullAt(c)) setNullAt(vec, r)
-          else writeValue(vec, r, f.dataType, row.get(c))
-        }
-        vec.setValueCount(rows.length)
-      }
-      root.setRowCount(rows.length)
-      val out = new ByteArrayOutputStream()
-      val writer = new ArrowStreamWriter(root, null, Channels.newChannel(out))
-      writer.start(); writer.writeBatch(); writer.end(); writer.close()
-      out.toByteArray
-    } finally { root.close(); allocator.close() }
-  }
-
-  private def sparkTypeOf(f: Field): DataType = f.getType match {
-    case _: ArrowType.Bool => BooleanType
-    case t: ArrowType.Int if t.getBitWidth == 32 => IntegerType
-    case t: ArrowType.Int if t.getBitWidth == 64 => LongType
-    case t: ArrowType.FloatingPoint if t.getPrecision == FloatingPointPrecision.SINGLE => FloatType
-    case t: ArrowType.FloatingPoint if t.getPrecision == FloatingPointPrecision.DOUBLE => DoubleType
-    case _: ArrowType.Utf8 => StringType
-    case _: ArrowType.Binary => BinaryType
-    case _: ArrowType.Date => DateType
-    case t: ArrowType.Timestamp if t.getTimezone == null => TimestampNTZType
-    case _: ArrowType.Timestamp => TimestampType
-    case _: ArrowType.Map =>
-      val entries = f.getChildren.get(0)
-      MapType(sparkTypeOf(entries.getChildren.get(0)),
-        sparkTypeOf(entries.getChildren.get(1)), valueContainsNull = true)
-    case _: ArrowType.List =>
-      ArrayType(sparkTypeOf(f.getChildren.get(0)), containsNull = true)
-    case _: ArrowType.Struct =>
-      StructType(f.getChildren.asScala.toSeq.map(c =>
-        StructField(c.getName, sparkTypeOf(c), nullable = true)))
-    case other => throw new BadCallException(s"arrow result: unsupported $other")
-  }
-
-  /** Read one value at row `r`; recurses into list (via the offsets the
-    * writer laid down) and struct (per child at the same row index). */
-  private def readValue(vec: ValueVector, r: Int, dt: DataType): Any =
-    if (vec.isNull(r)) null
-    else (dt, vec) match {
-      case (BooleanType, v: BitVector)      => v.get(r) == 1
-      case (IntegerType, v: IntVector)      => v.get(r)
-      case (LongType, v: BigIntVector)      => v.get(r)
-      case (FloatType, v: Float4Vector)     => v.get(r)
-      case (DoubleType, v: Float8Vector)    => v.get(r)
-      case (StringType, v: VarCharVector)   => new String(v.get(r), "UTF-8")
-      case (BinaryType, v: VarBinaryVector) => v.get(r)
-      case (DateType, v: DateDayVector) =>
-        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v.get(r).toLong))
-      case (TimestampType, v: TimeStampMicroTZVector) =>
-        val us = v.get(r)
-        val ts = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000)
-        ts.setNanos((Math.floorMod(us, 1000000L) * 1000).toInt)
-        ts
-      case (TimestampNTZType, v: TimeStampMicroVector) =>
-        val us = v.get(r)
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(us, 1000000L),
-          (Math.floorMod(us, 1000000L) * 1000).toInt, java.time.ZoneOffset.UTC)
-      case (ArrayType(et, _), v: ListVector) =>
-        val s = v.getElementStartIndex(r); val e = v.getElementEndIndex(r)
-        (s until e).map(i => readValue(v.getDataVector, i, et))
-      case (MapType(kt, vt, _), v: MapVector) =>
-        val s = v.getElementStartIndex(r); val e = v.getElementEndIndex(r)
-        val entries = v.getDataVector.asInstanceOf[StructVector]
-        (s until e).map { i =>
-          readValue(entries.getChildByOrdinal(0), i, kt) ->
-            readValue(entries.getChildByOrdinal(1), i, vt)
-        }.toMap
-      case (StructType(fs), v: StructVector) =>
-        Row(fs.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          readValue(v.getChildByOrdinal(i), r, f.dataType) }: _*)
-      case (dt2, v) => throw new IllegalStateException(s"$dt2 vs ${v.getClass}")
-    }
+  def toArrowBytes(df: DataFrame, maxResultBytes: Long = 0L): Array[Byte] =
+    GraftService.capped(df, maxResultBytes)(GraftColumnBridge.toArrowStream(df))
 
   /** Deserialize an Arrow IPC stream back into a local DataFrame (the
     * round-trip gate; a real non-JVM client would stop at the Arrow table). */
-  def fromArrowBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
-    val allocator = new RootAllocator()
-    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), allocator)
-    try {
-      val root = reader.getVectorSchemaRoot
-      val arrowFields = root.getSchema.getFields.asScala.toSeq
-      val sparkSchema = StructType(arrowFields.map(f =>
-        StructField(f.getName, sparkTypeOf(f), nullable = true)))
-      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-      while (reader.loadNextBatch()) {
-        (0 until root.getRowCount).foreach { r =>
-          val vals = (0 until root.getFieldVectors.size).map { c =>
-            readValue(root.getVector(c), r, sparkSchema.fields(c).dataType)
-          }
-          rows += Row(vals: _*)
-        }
-      }
-      spark.createDataFrame(rows.asJava, sparkSchema)
-    } finally { reader.close(); allocator.close() }
-  }
+  def fromArrowBytes(spark: SparkSession, bytes: Array[Byte]): DataFrame =
+    GraftColumnBridge.fromArrowStream(spark, bytes)
 }

@@ -137,7 +137,12 @@ object GraftService {
     * Catalyst estimates aggregates and joins from their INPUTS, so a
     * 3-row groupBy over a 10 GB table would be spuriously rejected —
     * those shapes rely on the post-hoc backstop alone. */
-  def collectResult(df: DataFrame, maxResultBytes: Long = 0L): Array[org.apache.spark.sql.Row] = {
+  def collectResult(df: DataFrame, maxResultBytes: Long = 0L): Array[org.apache.spark.sql.Row] =
+    capped(df, maxResultBytes)(df.collect())
+
+  /** `collect`, a collect of `df`'s result, under [[collectResult]]'s two
+    * guards. */
+  private[graft] def capped[T](df: DataFrame, maxResultBytes: Long)(collect: => T): T = {
     val plan = df.queryExecution.optimizedPlan
     val resultSized = plan.collectFirst {
       case _: org.apache.spark.sql.catalyst.plans.logical.Aggregate => ()
@@ -150,7 +155,7 @@ object GraftService {
           s"estimated result size $est B exceeds the configured cap " +
             s"$maxResultBytes B (reference FileTooBigError semantics)")
     }
-    try df.collect()
+    try collect
     catch {
       case e: Throwable if isResultCapAbort(e) =>
         throw new ResultTooBigException(

@@ -15,13 +15,8 @@ object AggSpec {
     * (reference: README.md:105). */
   def apply(col: String): AggSpec = AggSpec(col, "sum", col)
 
-  /** Ops observable in the reference's tests (sum/mean/count —
-    * tests/test_simple_rpc.py:118-126) plus the inferred parquery public set.
-    * `approx_count_distinct` is our scalable extension for 100 TB. */
-  val SupportedOps: Set[String] = Set(
-    "sum", "mean", "avg", "count", "min", "max", "std", "stddev",
-    "count_na", "count_distinct", "sorted_count_distinct",
-    "approx_count_distinct")
+  /** The keys of [[Translator.AggOps]]. */
+  val SupportedOps: Set[String] = Translator.AggOps.keySet
 }
 
 /** One filter term; terms in a list are AND-combined
@@ -30,8 +25,8 @@ object AggSpec {
 final case class FilterTerm(col: String, op: String, value: Any)
 
 object FilterTerm {
-  val SupportedOps: Set[String] =
-    Set("==", "=", "!=", ">", ">=", "<", "<=", "in", "not in")
+  /** The keys of [[Translator.FilterOps]]. */
+  val SupportedOps: Set[String] = Translator.FilterOps.keySet
 }
 
 /** How per-shard aggregates are combined.

@@ -22,7 +22,11 @@ import shaded.parquet.org.apache.thrift.TException
   * Spark 4's Parquet reader upcasts per file (int→long, int/long/float→
   * double, date→timestamp_ntz) and fills absent columns with null, so the
   * result is a single FileSourceScan: no per-shard DataFrame unions, no
-  * N-way plan blowup at 100k shards. Footers are read on a few threads
+  * N-way plan blowup at 100k shards. The scan's file index is answered
+  * from the same listing the footers came from, so the files are listed
+  * once per call and no listing job starts, at any shard count (a
+  * `spark.read` lists them again, in a Spark job above 32 paths). Footers
+  * are read on a few threads
   * (Spark's own fan-out, as its footer reader uses); a hung read is
   * bounded by the caller's `callWithRetry` timeout.
   *
@@ -50,7 +54,8 @@ object SchemaDrift {
 
   /** [[readSharded]] over shards already listed (e.g. by
     * `GroupByEngine.pruneMissing`), in the caller's order: the footer
-    * schemas of their data files, widened in order, drive one scan. */
+    * schemas of their data files, widened in order, drive one scan of
+    * exactly those files. */
   private[graft] def readListed(spark: SparkSession, shards: Seq[FileStatus]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
@@ -66,7 +71,8 @@ object SchemaDrift {
         case NonFatal(e) => throw new ShardFaultException(
           s"shard ${f.getPath} is not a readable Parquet file: ${e.getMessage}", e)
       }
-    val files = shards.flatMap(s => dataFiles(s.getPath.getFileSystem(conf), s)).distinct
+    val leaves = shards.map(s => s.getPath -> dataFiles(s.getPath.getFileSystem(conf), s))
+    val files = leaves.flatMap(_._2).distinct
     // 8 threads, as Spark's own footer reader uses; parmap wraps a failure
     // in SparkException, so each result comes back as a Try and the first
     // failure is rethrown here with its own type
@@ -74,7 +80,7 @@ object SchemaDrift {
       scala.util.Try(schemaOf(f))).map(_.get)
     val widened = schemas.reduceOption(widen).getOrElse(throw new ShardFaultException(
       s"no Parquet data file under ${shards.map(_.getPath).mkString(", ")}"))
-    spark.read.schema(widened).parquet(shards.map(_.getPath.toString): _*)
+    GraftColumnBridge.parquetScan(spark, shards.map(_.getPath), leaves.toMap, widened)
   }
 
   /** A file is itself; a directory contributes its leaf files, by name,

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.collection.immutable.SeqMap
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -17,24 +18,24 @@ object Translator {
   def filterColumn(terms: Seq[FilterTerm]): Option[Column] =
     terms.map(term).reduceOption(_ && _)
 
-  private def toLit(v: Any): Column = lit(v)
+  /** The filter ops, and the one list of them ([[FilterTerm.SupportedOps]]
+    * is its key set): each op → the term it makes of a column and a value.
+    * The op set is the parquery public API contract (SURVEY.md §2.2). */
+  val FilterOps: SeqMap[String, (Column, Any) => Column] = SeqMap(
+    ("==", (c, v) => c === lit(v)),
+    ("=", (c, v) => c === lit(v)),
+    ("!=", (c, v) => c =!= lit(v)),
+    (">", (c, v) => c > lit(v)),
+    (">=", (c, v) => c >= lit(v)),
+    ("<", (c, v) => c < lit(v)),
+    ("<=", (c, v) => c <= lit(v)),
+    ("in", (c, v) => c.isin(seqOf(v): _*)),
+    ("not in", (c, v) => !c.isin(seqOf(v): _*)))
 
-  private def term(t: FilterTerm): Column = {
-    val c = col(t.col)
-    t.op match {
-      case "==" | "=" => c === toLit(t.value)
-      case "!="       => c =!= toLit(t.value)
-      case ">"        => c > toLit(t.value)
-      case ">="       => c >= toLit(t.value)
-      case "<"        => c < toLit(t.value)
-      case "<="       => c <= toLit(t.value)
-      case "in"       => c.isin(seqOf(t.value): _*)
-      case "not in"   => !c.isin(seqOf(t.value): _*)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported filter op '$other' (supported: ${FilterTerm.SupportedOps.mkString(", ")})")
-    }
-  }
+  private def term(t: FilterTerm): Column =
+    FilterOps.getOrElse(t.op, throw new IllegalArgumentException(
+      s"unsupported filter op '${t.op}' (supported: ${FilterOps.keys.mkString(", ")})"))(
+      col(t.col), t.value)
 
   private def seqOf(v: Any): Seq[Any] = v match {
     case s: Seq[_]      => s
@@ -43,33 +44,34 @@ object Translator {
     case other          => Seq(other)
   }
 
-  /** One agg triplet → aliased aggregate Column.
+  /** The aggregate ops, and the one list of them ([[AggSpec.SupportedOps]]
+    * is its key set): each op → its aggregate of the input column.
     * sum/mean/count are the reference-verified ops
     * (tests/test_simple_rpc.py:118-126); the rest are the inferred parquery
     * public set, defined here against a DuckDB oracle (SURVEY.md §2.4).
     */
-  def aggColumn(spec: AggSpec): Column = {
-    val c = col(spec.input)
-    val agg = spec.op match {
-      case "sum"                   => sum(c)
-      case "mean" | "avg"          => avg(c)
-      case "count"                 => count(c)
-      case "min"                   => min(c)
-      case "max"                   => max(c)
-      case "std" | "stddev"        => stddev_samp(c)
-      case "count_na"              => count(when(c.isNull, lit(1)))
-      case "count_distinct"        => countDistinct(c)
-      // Exact distinct over a sorted-run optimization in the reference's
-      // kernel; semantically identical to count_distinct here.
-      case "sorted_count_distinct" => countDistinct(c)
-      // Scalable variant (HLL sketch) — extension for the 100 TB path.
-      case "approx_count_distinct" => approx_count_distinct(c)
-      case other =>
-        throw new IllegalArgumentException(
-          s"unsupported agg op '$other' (supported: ${AggSpec.SupportedOps.mkString(", ")})")
-    }
-    agg.as(spec.output)
-  }
+  val AggOps: SeqMap[String, Column => Column] = SeqMap(
+    ("sum", sum(_)),
+    ("mean", avg(_)),
+    ("avg", avg(_)),
+    ("count", count(_)),
+    ("min", min(_)),
+    ("max", max(_)),
+    ("std", stddev_samp(_)),
+    ("stddev", stddev_samp(_)),
+    ("count_na", c => count(when(c.isNull, lit(1)))),
+    ("count_distinct", countDistinct(_)),
+    // Exact distinct over a sorted-run optimization in the reference's
+    // kernel; semantically identical to count_distinct here.
+    ("sorted_count_distinct", countDistinct(_)),
+    // Scalable variant (HLL sketch) — extension for the 100 TB path.
+    ("approx_count_distinct", approx_count_distinct(_)))
+
+  /** One agg triplet → aliased aggregate Column. */
+  def aggColumn(spec: AggSpec): Column =
+    AggOps.getOrElse(spec.op, throw new IllegalArgumentException(
+      s"unsupported agg op '${spec.op}' (supported: ${AggOps.keys.mkString(", ")})"))(
+      col(spec.input)).as(spec.output)
 
   def aggColumns(specs: Seq[AggSpec]): Seq[Column] = specs.map(aggColumn)
 }

@@ -24,11 +24,6 @@ import graft.ops.ExactRound
   */
 object Dedup {
 
-  /** Exact duplicate statistics over a normalized key. */
-  def exactDupStats(df: DataFrame, key: Column): DataFrame =
-    df.groupBy(key.as("dup_key")).agg(count(lit(1)).as("copies"))
-      .filter(col("copies") > 1)
-
   /** Keep one row per exact key (first by `tieBreak` — deterministic, unlike
     * dropDuplicates which keeps an arbitrary row). */
   def dedupExact(df: DataFrame, key: Column, tieBreak: Column): DataFrame = {

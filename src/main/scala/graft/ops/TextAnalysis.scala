@@ -798,21 +798,6 @@ object TextAnalysis {
     size(phraseMatches(lower(text), phrases)) > 0
   }
 
-  /** DuckDB twin of [[blockedByPhrases]] — one RE2 word-boundary test per
-    * phrase, OR-composed (the N-pass shape the native expression replaces;
-    * fine at oracle scale). Same `[a-z0-9 ]` phrase contract. */
-  def blockedByPhrasesSql(col: String, phrases: Seq[String]): String = {
-    phrases.foreach(p => require(p.matches("[a-z0-9 ]+"),
-      s"blocklist phrase must be lowercase [a-z0-9 ]: '$p'"))
-    phrases.map(p => phraseHitSql(col, p)).mkString("(", " OR ", ")")
-  }
-
-  /** DuckDB word-boundary containment test for ONE lowercase phrase over
-    * an already-lowercased text expression — the RE2 predicate the
-    * automaton's boundary rule mirrors char-for-char. */
-  def phraseHitSql(col: String, phrase: String): String =
-    s"regexp_matches($col, '(^|[^a-z0-9])$phrase($$|[^a-z0-9])')"
-
   /** RefinedWeb/CCNet-style boilerplate removal: drop every line that
     * appears in at least `minDocs` DISTINCT documents (nav bars, cookie
     * banners, license footers — the lines that repeat verbatim across a
@@ -1009,10 +994,6 @@ object TextAnalysis {
   def avgWordLen(c: Column): Column =
     aggregate(tokens(c), lit(0L), (acc, w) => acc + length(w)).cast("double") /
       size(tokens(c))
-
-  /** Fraction of tokens found in `words`. */
-  def wordSetRatio(c: Column, words: Seq[String]): Column =
-    countInSet(c, words).cast("double") / size(tokens(c))
 
   /** Number of tokens found in `words`. */
   def countInSet(c: Column, words: Seq[String]): Column =

@@ -655,9 +655,8 @@ class ServiceSpec extends AnyFunSuite {
 
   test("arrow wire round-trips map columns (incl. null values, empty and null maps)") {
     // map<string,bigint> with a null value, an empty map, a NULL map, and a
-    // nested map<string,array<int>> value — the last wire-type gap from the
-    // round-7 verdict. Entries serialize key-sorted, so byte-level equality
-    // of re-serialization is also pinned (Scala Map order must not leak).
+    // nested map<string,array<int>> value. Entries keep the result's order,
+    // so re-serializing the decoded frame is byte-equal (pinned below).
     val df = spark.sql(
       """SELECT * FROM VALUES
            (1, map('b', CAST(2 AS BIGINT), 'a', CAST(1 AS BIGINT),
@@ -673,12 +672,108 @@ class ServiceSpec extends AnyFunSuite {
     // deterministic wire: re-serializing the deserialized frame is byte-equal
     assert(ArrowResult.toArrowBytes(back.orderBy("i")).toSeq ===
       ArrowResult.toArrowBytes(df.orderBy("i")).toSeq)
-    // non-scalar map keys are a typed, actionable error — not a crash
-    val err = intercept[graft.core.BadCallException] {
-      ArrowResult.toArrowBytes(spark.sql(
-        "SELECT map(array(1), 'v') AS bad"))
+    // non-scalar map keys ship too
+    val arrayKey = spark.sql("SELECT map(array(1), 'v') AS m")
+    val backKey = ArrowResult.fromArrowBytes(spark, ArrowResult.toArrowBytes(arrayKey))
+    assert(backKey.schema.map(_.dataType) === arrayKey.schema.map(_.dataType))
+    assert(backKey.collect().toSeq === arrayKey.collect().toSeq)
+  }
+
+  test("arrow wire round-trips decimal(38,10), tinyint, smallint and a " +
+    "day-time interval with identical types") {
+    val df = spark.sql(
+      """SELECT * FROM VALUES
+           (1, CAST('12345678901234567890.0123456789' AS DECIMAL(38,10)),
+            CAST(-7 AS TINYINT), CAST(300 AS SMALLINT),
+            INTERVAL '1 02:03:04.5' DAY TO SECOND),
+           (2, NULL, NULL, NULL, NULL)
+         AS t(i, dec, ti, si, iv)""")
+    val back = ArrowResult.fromArrowBytes(spark, ArrowResult.toArrowBytes(df))
+    assert(back.schema.map(_.dataType) === df.schema.map(_.dataType))
+    assert(back.orderBy("i").collect().toSeq === df.orderBy("i").collect().toSeq)
+  }
+
+  test("a result over 3 partitions ships as exactly one record batch") {
+    import org.apache.arrow.memory.RootAllocator
+    import org.apache.arrow.vector.ipc.ArrowStreamReader
+    val df = spark.range(0, 30).toDF().repartition(3)
+    assert(df.rdd.getNumPartitions === 3)
+    val bytes = ArrowResult.toArrowBytes(df)
+    val allocator = new RootAllocator()
+    val reader = new ArrowStreamReader(new java.io.ByteArrayInputStream(bytes), allocator)
+    val rows = try Iterator.continually(reader.loadNextBatch()).takeWhile(identity)
+      .map(_ => reader.getVectorSchemaRoot.getRowCount).toList
+    finally { reader.close(); allocator.close() }
+    assert(rows === List(30))
+    assert(ArrowResult.fromArrowBytes(spark, bytes).orderBy("id").collect().toSeq ===
+      df.orderBy("id").collect().toSeq)
+  }
+
+  test("an empty result decodes to 0 rows with its schema") {
+    val df = spark.sql("SELECT 1 AS a, 'x' AS b, array(1.5) AS c").filter("a > 1")
+    val back = ArrowResult.fromArrowBytes(spark, ArrowResult.toArrowBytes(df))
+    assert(back.schema === df.schema)
+    assert(back.count() === 0L)
+  }
+
+  test("toArrowBytes is one SQL execution: exactly one " +
+    "QueryExecutionListener.onSuccess") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val queries = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(s"failed: $funcName")
     }
-    assert(err.getMessage.contains("map keys must be scalar"))
+    // a one-task marker job: the shared listener queue delivers its start
+    // after every event posted before it, the query events included
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicReference
+    val tag = "graft.test.marker"
+    val marker = new AtomicReference(new CountDownLatch(1))
+    val markers = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(tag) != null)) marker.get.countDown()
+    }
+    def drain(): Unit = {
+      val latch = new CountDownLatch(1)
+      marker.set(latch)
+      sc.setLocalProperty(tag, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
+      assert(latch.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+    }
+    spark.listenerManager.register(queries)
+    sc.addSparkListener(markers)
+    try {
+      drain()
+      seen.clear()
+      ArrowResult.toArrowBytes(spark.range(0, 10).groupBy(col("id") % 3).count())
+      drain()
+      assert(seen.toArray.toSeq === Seq("toArrowBytes"))
+    } finally {
+      sc.removeSparkListener(markers)
+      spark.listenerManager.unregister(queries)
+    }
+  }
+
+  test("no org.apache.arrow import in src/main: the wire is Spark's own " +
+    "Arrow codec") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"scanned only ${files.size} files under $root")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      t = line.trim if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      if line.contains("org.apache.arrow")
+    } yield s"${root.relativize(f)}:${i + 1}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("native cosine expression is bit-identical to the composable form") {

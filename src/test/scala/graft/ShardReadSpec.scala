@@ -47,11 +47,12 @@ class ShardReadSpec extends AnyFunSuite {
   private def mergeRead(paths: String*) =
     spark.read.option("mergeSchema", "true").parquet(paths: _*)
 
-  test("GraftService.groupby over two lineitem shard files starts no job " +
-    "before its action") {
+  /** A groupby over `n` lineitem copies starts no job before its action
+    * and answers as Spark's own read of the same files. */
+  private def groupbyStartsNoJob(n: Int): Unit = {
     val dir = Files.createTempDirectory("graft-resolve")
-    val shards = Seq("a", "b").map { n =>
-      Files.copy(Paths.get(s"$sf/lineitem.parquet"), dir.resolve(s"$n.parquet")).toString
+    val shards = (0 until n).map { i =>
+      Files.copy(Paths.get(s"$sf/lineitem.parquet"), dir.resolve(f"s$i%03d.parquet")).toString
     }
     val aggs = Seq(AggSpec("l_quantity", "sum", "q"), AggSpec("l_orderkey", "count", "n"))
     val (df, jobs) = jobsOf(GraftService.groupby(spark,
@@ -61,6 +62,17 @@ class ShardReadSpec extends AnyFunSuite {
       .agg(sum("l_quantity"), count("l_orderkey"))
     assert(df.orderBy("l_returnflag").collect().toSeq ===
       want.orderBy("l_returnflag").collect().toSeq)
+  }
+
+  test("GraftService.groupby over two lineitem shard files starts no job " +
+    "before its action") {
+    groupbyStartsNoJob(2)
+  }
+
+  // above spark.sql.sources.parallelPartitionDiscovery.threshold (32) a
+  // spark.read lists its paths in a Spark job
+  test("groupby over 40 shard files starts no job before its action") {
+    groupbyStartsNoJob(40)
   }
 
   test("readSharded over two drifted directories starts no job before its " +
@@ -111,10 +123,12 @@ class ShardReadSpec extends AnyFunSuite {
       map(col("id").cast("string"), col("id")).as("m"),
       lit(null).cast("string").as("empty"))
     Seq("a", "b").foreach(n => rich.repartition(3).write.parquet(s"$dir/$n"))
+    rich.write.partitionBy("i").parquet(s"$dir/hive")
     val names = Files.list(Paths.get(s"$dir/a")).iterator.asScala
       .map(_.getFileName.toString).toSeq
     assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")), names)
-    Seq(Seq(s"$dir/a"), Seq(s"$dir/a", s"$dir/b")).foreach { set =>
+    assert(Files.isDirectory(Paths.get(s"$dir/hive/i=0")))
+    Seq(Seq(s"$dir/a"), Seq(s"$dir/a", s"$dir/b"), Seq(s"$dir/hive")).foreach { set =>
       val got = SchemaDrift.readSharded(spark, set)
       assert(got.schema === mergeRead(set: _*).schema, set)
       assert(got.count() === 40L * set.size)
