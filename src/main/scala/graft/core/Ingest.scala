@@ -1,8 +1,13 @@
 package graft.core
 
+import java.nio.file.{Files, Paths}
 import java.util.UUID
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 
 /** Ingestion + data distribution, replacing the reference's
@@ -14,6 +19,13 @@ import org.apache.spark.sql.functions._
   * README.md:145). On shared storage that barrier collapses to an atomic
   * MANIFEST pointer swap: writers stage a complete new file set, then one
   * rename publishes it; readers resolve the manifest first.
+  *
+  * A version dir always holds every data file of its version, so the
+  * manifest names one directory. Files are immutable once published, so
+  * versions share them: an append hard-links the published version's
+  * files into the new dir and writes only the new rows (see
+  * [[atomicPublish]]). An append-only table therefore gains one file per
+  * batch partition per append; [[compact]] re-packs them.
   */
 object Ingest {
 
@@ -66,12 +78,96 @@ object Ingest {
     * file set under `data/<uuid>/`, then swap the manifest pointer with one
     * rename. Readers via [[readPublished]] always see exactly one complete
     * version — the moveparquet barrier semantics without any coordination
-    * service. */
-  def atomicPublish(df: DataFrame, tableDir: String): String = {
-    val version = UUID.randomUUID().toString.take(8)
-    val dataDir = s"$tableDir/data/$version"
-    df.write.parquet(dataDir)
-    publishManifest(df.sparkSession, tableDir, dataDir, version)
+    * service. If the write fails, the staged dir is deleted and the
+    * manifest is unchanged.
+    *
+    * Appends share files. When `df`'s analyzed plan is a `Union` with a
+    * child that is a bare Parquet scan of this table's own files — what
+    * `readPublished(spark, tableDir).unionByName(batch)` builds — only the
+    * other children are written, and each scanned file (with its `.crc`)
+    * is hard-linked into the staged dir. The scan child qualifies when its
+    * relation has no partition columns and no bucket spec, every file it
+    * lists is under `<tableDir>/data/` with a distinct name, its column
+    * names are the union's, its data schema equals (ignoring nullability)
+    * the schema [[SchemaDrift]] resolves for those files, and `tableDir` is
+    * on the local (`file:`) filesystem. Anything else — a filtered or
+    * projected scan, a scan under a narrower schema, files outside the
+    * data root, HDFS or an object store — is written in full. Either way
+    * the new version holds the same rows; only file boundaries differ. */
+  def atomicPublish(df: DataFrame, tableDir: String): String =
+    staged(df.sparkSession, tableDir) { dataDir =>
+      appendShape(df, tableDir) match {
+        case Some((added, shared)) =>
+          added.write.parquet(dataDir.toString)
+          shared.foreach(link(_, dataDir))
+        case None => df.write.parquet(dataDir.toString)
+      }
+    }
+
+  /** Stage a fresh version dir under `<tableDir>/data/`, have `fill` write
+    * it, then flip the manifest to it. If `fill` fails, the staged dir is
+    * deleted before the failure surfaces: the manifest never named it, so
+    * no reader saw it. */
+  private def staged(spark: SparkSession, tableDir: String)(fill: Path => Unit): String = {
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // never an existing dir's name: a failed fill deletes the dir it names
+    val version = Iterator.continually(UUID.randomUUID().toString.take(8))
+      .find(v => !fs.exists(new Path(s"$tableDir/data/$v"))).get
+    val dataDir = new Path(s"$tableDir/data/$version")
+    try fill(dataDir) catch {
+      case e: Throwable =>
+        try fs.delete(dataDir, true) catch { case _: Throwable => () }
+        throw e
+    }
+    publishManifest(spark, tableDir, dataDir.toString, version)
+  }
+
+  /** `df` split for an append (the rule in [[atomicPublish]]): the union
+    * of the children to write, under the union's column names, and the
+    * files of the one child that scans `tableDir`'s own data. None when
+    * `df` is not that shape. */
+  private def appendShape(df: DataFrame, tableDir: String): Option[(DataFrame, Seq[Path])] = {
+    val spark = df.sparkSession
+    val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dataRoot = fs.makeQualified(new Path(tableDir, "data"))
+    def ownFiles(u: Union, child: LogicalPlan): Option[Seq[FileStatus]] = child match {
+      case lr: LogicalRelation if !lr.isStreaming &&
+          lr.output.map(_.name) == u.output.map(_.name) => lr.relation match {
+        case HadoopFsRelation(index: PartitioningAwareFileIndex, parts, data, None,
+            _: ParquetFileFormat, _) if parts.isEmpty =>
+          val files = index.allFiles()
+          val own = files.nonEmpty &&
+            files.forall(f => fs.makeQualified(f.getPath).toString
+              .startsWith(s"$dataRoot/")) &&
+            files.map(_.getPath.getName).distinct.size == files.size &&
+            SchemaDrift.resolve(spark, files)
+              .exists(DataTypeUtils.equalsIgnoreNullability(data, _))
+          Option.when(own)(files)
+        case _ => None
+      }
+      case _ => None
+    }
+    df.queryExecution.analyzed match {
+      case u: Union if dataRoot.toUri.getScheme == "file" =>
+        u.children.indices.iterator
+          .flatMap(i => ownFiles(u, u.children(i)).map(i -> _)).nextOption()
+          .map { case (i, files) =>
+            val rest = u.children.patch(i, Nil, 1)
+            (GraftColumnBridge.unionOf(spark, rest).toDF(u.output.map(_.name): _*),
+              files.map(_.getPath))
+          }
+      case _ => None
+    }
+  }
+
+  /** Hard-link the local file `f`, and its checksum sibling where one
+    * exists, into the directory `dir` under the same name. */
+  private def link(f: Path, dir: Path): Unit = {
+    val src = Paths.get(f.toUri.getPath)
+    val dst = Paths.get(dir.toUri.getPath)
+    Files.createLink(dst.resolve(src.getFileName), src)
+    val crc = src.resolveSibling(s".${src.getFileName}.crc")
+    if (Files.exists(crc)) Files.createLink(dst.resolve(crc.getFileName), crc)
   }
 
   /** The manifest commit point, shared by every publish path: write the
@@ -131,7 +227,10 @@ object Ingest {
 
   /** Publish each streaming micro-batch as a new complete table version —
     * `foreachBatch` bridge from Structured Streaming into the atomic
-    * manifest protocol (readers always see exactly one full snapshot). */
+    * manifest protocol (readers always see exactly one full snapshot).
+    * Each batch REPLACES the table; it is not appended. `foreachBatch` can
+    * run a batch again after a restart, and replacement is idempotent
+    * under that replay where an append would publish its rows twice. */
   def publishStream(df: DataFrame, tableDir: String): org.apache.spark.sql.streaming.StreamingQuery =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       atomicPublish(batch, tableDir); ()
@@ -161,11 +260,10 @@ object Ingest {
     Tickets.submitWithFiles(spark,
         s"download ${sources.size} files -> $tableDir", sources) { (s, id) =>
       val conf = s.sparkContext.hadoopConfiguration
-      val version = UUID.randomUUID().toString.take(8)
-      val dataDir = new Path(s"$tableDir/data/$version")
-      val fs = dataDir.getFileSystem(conf)
-      fs.mkdirs(dataDir)
-      try {
+      // failed or cancelled: staged deletes the unreferenced version dir
+      staged(s, tableDir) { dataDir =>
+        val fs = dataDir.getFileSystem(conf)
+        fs.mkdirs(dataDir)
         sources.zipWithIndex.foreach { case (src, i) =>
           if (!Tickets.get(id).exists(_.state == Tickets.Running))
             throw new InterruptedException("cancelled mid-ingest")
@@ -186,15 +284,7 @@ object Ingest {
               throw e
           }
         }
-      } catch {
-        case e: Throwable =>
-          // failed or cancelled: the unreferenced staged version must not
-          // accumulate — delete it before surfacing the failure (manifest
-          // was never flipped, so readers never saw it)
-          try fs.delete(dataDir, true) catch { case _: Throwable => () }
-          throw e
       }
-      publishManifest(s, tableDir, dataDir.toString, version)
       ()
     }
 
@@ -206,7 +296,10 @@ object Ingest {
     * garbage-collect inside the write path). Keeps the currently-published
     * version unconditionally plus any version modified within `graceMs`
     * (readers that resolved the manifest just before a flip finish their
-    * scan inside the grace window). Returns the deleted dirs. */
+    * scan inside the grace window). A version dir that shares files with
+    * a newer one (an append's hard links) only drops its links: a file's
+    * data goes when the last dir naming it goes, so vacuum never deletes a
+    * file the current version lists. Returns the deleted dirs. */
   def vacuum(spark: SparkSession, tableDir: String,
       graceMs: Long = 24L * 3600 * 1000): Seq[String] = {
     val fs = new Path(tableDir).getFileSystem(spark.sparkContext.hadoopConfiguration)

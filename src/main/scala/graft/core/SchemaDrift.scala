@@ -58,9 +58,19 @@ object SchemaDrift {
     * exactly those files. */
   private[graft] def readListed(spark: SparkSession, shards: Seq[FileStatus]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
+    val leaves = shards.map(s => s.getPath -> dataFiles(s.getPath.getFileSystem(conf), s))
+    val widened = resolve(spark, leaves.flatMap(_._2).distinct).getOrElse(
+      throw new ShardFaultException(
+        s"no Parquet data file under ${shards.map(_.getPath).mkString(", ")}"))
+    GraftColumnBridge.parquetScan(spark, shards.map(_.getPath), leaves.toMap, widened)
+  }
+
+  /** The schema a scan of the data `files` resolves to: each file's footer
+    * schema (the Spark schema its writer stored, else the converted
+    * Parquet schema), widened in order; None for no file. */
+  private[graft] def resolve(spark: SparkSession, files: Seq[FileStatus]): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
     val converter = new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-    // one file's schema from its footer alone: the Spark schema its writer
-    // stored, else the converted Parquet schema
     def schemaOf(f: FileStatus): StructType =
       try ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, ParquetFooterReader
         .readFooter(HadoopInputFile.fromStatus(f, conf), SKIP_ROW_GROUPS)), converter)
@@ -71,16 +81,11 @@ object SchemaDrift {
         case NonFatal(e) => throw new ShardFaultException(
           s"shard ${f.getPath} is not a readable Parquet file: ${e.getMessage}", e)
       }
-    val leaves = shards.map(s => s.getPath -> dataFiles(s.getPath.getFileSystem(conf), s))
-    val files = leaves.flatMap(_._2).distinct
     // 8 threads, as Spark's own footer reader uses; parmap wraps a failure
     // in SparkException, so each result comes back as a Try and the first
     // failure is rethrown here with its own type
-    val schemas = GraftColumnBridge.parmap(files, "graft-footer", 8)(f =>
-      scala.util.Try(schemaOf(f))).map(_.get)
-    val widened = schemas.reduceOption(widen).getOrElse(throw new ShardFaultException(
-      s"no Parquet data file under ${shards.map(_.getPath).mkString(", ")}"))
-    GraftColumnBridge.parquetScan(spark, shards.map(_.getPath), leaves.toMap, widened)
+    GraftColumnBridge.parmap(files, "graft-footer", 8)(f => scala.util.Try(schemaOf(f)))
+      .map(_.get).reduceOption(widen)
   }
 
   /** A file is itself; a directory contributes its leaf files, by name,

@@ -3,7 +3,7 @@ package org.apache.spark.sql
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Statistics, Union}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.arrow.ArrowConverters
@@ -22,8 +22,9 @@ import org.apache.spark.storage.RDDBlockId
   * public Spark jars are touched. [[graft.ops.Waist]] uses the same door
   * for Spark-internal storage, statistics and checkpoint state,
   * [[graft.core.SchemaDrift]] for Spark's bounded fan-out and a file index
-  * seeded from its own listing, and [[graft.core.ArrowResult]] for the
-  * Arrow codec PySpark and Spark Connect use. */
+  * seeded from its own listing, [[graft.core.ArrowResult]] for the
+  * Arrow codec PySpark and Spark Connect use, and [[graft.core.Ingest]]
+  * to write an append's new union children as a frame. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
@@ -107,4 +108,10 @@ object GraftColumnBridge {
     cs.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
       dataSchema.asNullable, None, new ParquetFileFormat, Map.empty)(cs))
   }
+
+  /** The positional union of the analyzed `plans` as a frame; one plan is
+    * itself. */
+  def unionOf(spark: SparkSession, plans: Seq[LogicalPlan]): Dataset[Row] =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      plans match { case Seq(p) => p; case ps => Union(ps) })
 }

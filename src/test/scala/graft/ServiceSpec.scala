@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -140,6 +142,125 @@ class ServiceSpec extends AnyFunSuite {
     try q.processAllAvailable() finally q.stop()
     assert(Ingest.readPublished(spark, tableDir).count() ===
       graft.queries.QueryUtil.events(spark, sf).count())
+  }
+
+  test("streaming: each micro-batch replaces the table, so two batches " +
+    "publish exactly the second batch's rows") {
+    import spark.implicits._
+    val srcDir = Files.createTempDirectory("graft-pubsrc2")
+    val stage = Files.createTempDirectory("graft-pubstage").toString
+    val tableDir = Files.createTempDirectory("graft-pubtable2").toString
+    // each batch lands in the watched dir by one rename, never half-written
+    def land(i: Int, ids: Seq[Long]): Unit = {
+      ids.toDF("id").coalesce(1).write.parquet(s"$stage/b$i")
+      val part = new java.io.File(s"$stage/b$i").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head.toPath
+      Files.move(part, srcDir.resolve(s"b$i.parquet"))
+    }
+    land(1, Seq(1L, 2L, 3L))
+    val stream = spark.readStream.schema("id long").parquet(srcDir.toString)
+    val q = Ingest.publishStream(stream, tableDir)
+    try {
+      q.processAllAvailable()
+      land(2, Seq(10L, 11L))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(Ingest.readPublished(spark, tableDir).as[Long].collect().sorted.toSeq ===
+      Seq(10L, 11L))
+  }
+
+  /** A 20,000-row table published over three files, and a 10-row batch. */
+  private def appendFixture(name: String): (String, DataFrame, DataFrame) = {
+    def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+      .select(col("id"), sha2(col("id").cast("string"), 256).as("text"))
+    val table = Files.createTempDirectory(name).toString
+    val v1 = rows(0, 20000).repartition(3)
+    Ingest.atomicPublish(v1, table)
+    (table, rows(0, 20000), rows(20000, 20010))
+  }
+
+  private def manifest(table: String): String =
+    Files.readString(Paths.get(table, "_MANIFEST")).trim
+
+  private def parquetFiles(versionDir: String): Seq[java.nio.file.Path] =
+    Files.list(Paths.get(versionDir)).iterator.asScala
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+
+  private def sharedFiles(a: String, b: String): Seq[java.nio.file.Path] =
+    parquetFiles(a).filter(f => parquetFiles(b).exists(Files.isSameFile(f, _)))
+
+  private def rowsOf(df: DataFrame): Seq[(Long, String)] =
+    df.collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  test("an append hard-links every file of v1 into v2 and writes only the " +
+    "batch's rows") {
+    val (table, v1, batch) = appendFixture("graft-append")
+    val v1Dir = manifest(table)
+    val v1Bytes = parquetFiles(v1Dir).map(Files.size).sum
+    assert(parquetFiles(v1Dir).size > 1)
+    val (_, reading) = TaggedJobs.of(Ingest.atomicPublish(
+      Ingest.readPublished(spark, table).unionByName(batch), table))
+    val written = reading.bytesWritten
+    val v2Dir = manifest(table)
+    assert(v2Dir !== v1Dir)
+    assert(sharedFiles(v1Dir, v2Dir).size === parquetFiles(v1Dir).size)
+    assert(rowsOf(Ingest.readPublished(spark, table)) === rowsOf(v1.union(batch)))
+    assert(written > 0 && written < v1Bytes, s"append wrote $written of $v1Bytes bytes")
+  }
+
+  test("a frame resolved before an append still reads exactly v1 after the flip") {
+    val (table, v1, batch) = appendFixture("graft-append-reader")
+    val before = Ingest.readPublished(spark, table)
+    Ingest.atomicPublish(Ingest.readPublished(spark, table).unionByName(batch), table)
+    assert(rowsOf(before) === rowsOf(v1))
+  }
+
+  test("vacuum after an append keeps every current row and every file the " +
+    "current version lists") {
+    val (table, v1, batch) = appendFixture("graft-append-vacuum")
+    Ingest.atomicPublish(Ingest.readPublished(spark, table).unionByName(batch), table)
+    val current = parquetFiles(manifest(table)).map(f => f -> Files.size(f))
+    assert(Ingest.vacuum(spark, table, graceMs = 0).size === 1)
+    current.foreach { case (f, size) =>
+      assert(Files.exists(f) && Files.size(f) === size, s"vacuum touched $f")
+    }
+    assert(rowsOf(Ingest.readPublished(spark, table)) === rowsOf(v1.union(batch)))
+  }
+
+  test("a filtered scan, a scan outside the data root and a scan under a " +
+    "narrower schema are written in full, with the right rows") {
+    val (table, v1, batch) = appendFixture("graft-append-full")
+    val v1Dir = manifest(table)
+    def publishShares(df: DataFrame, want: DataFrame): Unit = {
+      Ingest.atomicPublish(df, table)
+      assert(sharedFiles(v1Dir, manifest(table)).isEmpty)
+      assert(Ingest.readPublished(spark, table).collect().toSeq.sortBy(_.toString) ===
+        want.collect().toSeq.sortBy(_.toString))
+    }
+    val cur = Ingest.readPublished(spark, table)
+    publishShares(cur.filter(col("id") < 100).unionByName(batch),
+      v1.filter(col("id") < 100).union(batch))
+    val outside = Files.createTempDirectory("graft-append-outside")
+    parquetFiles(v1Dir).foreach(f => Files.copy(f, outside.resolve(f.getFileName)))
+    publishShares(spark.read.parquet(outside.toString).unionByName(batch), v1.union(batch))
+    publishShares(spark.read.schema("id long").parquet(v1Dir).unionByName(batch.select("id")),
+      v1.select("id").union(batch.select("id")))
+  }
+
+  test("a failed publish leaves only the published version in data/ and " +
+    "the manifest unchanged, on the full and the append path") {
+    val (table, _, batch) = appendFixture("graft-publish-fail")
+    val v1Dir = manifest(table)
+    def boom(df: DataFrame) =
+      df.withColumn("id", when(col("id") % 10000 === 5, raise_error(lit("boom")))
+        .otherwise(col("id")))
+    Seq(boom(Ingest.readPublished(spark, table)),
+      Ingest.readPublished(spark, table).unionByName(boom(batch))).foreach { df =>
+      intercept[Exception](Ingest.atomicPublish(df, table))
+      assert(manifest(table) === v1Dir)
+      assert(Files.list(Paths.get(table, "data")).iterator.asScala
+        .map(_.toString).toSeq === Seq(Paths.get(v1Dir).toString))
+    }
   }
 
   test("ticket lifecycle: submit → list → cancel → terminal; fast job → DONE") {

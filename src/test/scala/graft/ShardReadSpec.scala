@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core._
@@ -16,32 +13,10 @@ import scala.jdk.CollectionConverters._
 class ShardReadSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  /** `body`'s result and the Spark jobs it started on this thread. Jobs
-    * are tagged by a local property; a one-task marker job, whose start
-    * the listener bus delivers after every earlier event, drains the bus
-    * before the count is read (as graft.Profile drains it). */
+  /** `body`'s result and the Spark jobs it started on this thread. */
   private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = "graft.test.jobs"
-    val jobs = new AtomicInteger(0)
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("marker") => drained.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      val out = try body finally sc.setLocalProperty(tag, null)
-      sc.setLocalProperty(tag, "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(tag, null)
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+    val (out, reading) = TaggedJobs.of(body)
+    (out, reading.jobs)
   }
 
   private def mergeRead(paths: String*) =
